@@ -227,7 +227,8 @@ object Bench {
     // 10.9k / 10.0k clips/s) while the 4N side improves (16.5k -> 20.1k ->
     // 22.7k) — genuine amortization of the wide session's idle floors, the
     // same mechanism that feeds a 1000-executor cluster at 10^12 rows.
-    // Needs the 96g heap build.sbt now defaults to (SPARK_DRIVER_MEM).
+    // Needs a 96g heap: run with SPARK_DRIVER_MEM=96g (build.sbt's default
+    // is sized to the host).
     val nClips = sys.env.getOrElse("SPARK_GRAFT_CLIPS", "1600000").toLong
     val nAudio = sys.env.getOrElse("SPARK_GRAFT_AUDIO_CLIPS", "2000").toLong
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]

@@ -2,6 +2,7 @@ package graft
 
 import graft.api.FuzzyPipeline
 import graft.conf.FuzzyConf
+import graft.stage.SmallInput
 import graft.sql.{functions => gf}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -74,21 +75,16 @@ object Queries {
     * bytes; these tables feed per-row kernels — md5 per gram, join fanout
     * over a dense trigram vocabulary — whose CPU dwarfs their bytes, so
     * size-based coalescing serializes whole stages onto 1-2 tasks; measured
-    * 17-33 s single-task stages on sf0.1). Gated on the optimizer's LEAF
-    * stats: inputs past the threshold (real corpora) are returned unchanged,
-    * so the exchange's cost stays bounded and no corpus-scale scan is ever
-    * repartitioned. Results are unaffected: every consumer aggregates
-    * order-free (integer sums, min, count) per the oracle-parity rules.
+    * 17-33 s single-task stages on sf0.1). Gated by [[SmallInput]]: inputs
+    * past it (real corpora) are returned unchanged, so the exchange's cost
+    * stays bounded and no corpus-scale scan is ever repartitioned. Results
+    * are unaffected: every consumer aggregates order-free (integer sums,
+    * min, count) per the oracle-parity rules.
     */
-  private val spreadBytesGate = 64L << 20
-  private def spreadSmall(df: DataFrame): DataFrame = {
-    val est =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
-    if (est <= spreadBytesGate)
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+  private def spreadSmall(df: DataFrame): DataFrame =
+    if (SmallInput(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
-  }
+
   private def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
   private def li(s: SparkSession, dir: String): DataFrame =
@@ -462,7 +458,8 @@ object Queries {
         docs(s, dir)
           .filter(col("doc_id") < 10)
           .select(col("doc_id"),
-            posexplode(gf.minhashSig(gf.shingles(col("text"), 3), 16)).as(Seq("k", "mh")))
+            posexplode(gf.sigBandsFromKey(col("text"), 3, 16, 1, 1).getField("sig"))
+              .as(Seq("k", "mh")))
           .orderBy("doc_id", "k"),
       s"""with corpus as (select doc_id, $sqlNorm as s from documents where doc_id < 10),
          |g as (select distinct doc_id, substr(s,i,3) as gram
@@ -478,7 +475,8 @@ object Queries {
         docs(s, dir)
           .filter(col("doc_id") < 10)
           .select(col("doc_id"),
-            explode(gf.bandKeys(gf.minhashSig(gf.shingles(col("text"), 3), 32), 4, 8)).as("band_key"))
+            explode(gf.bandKeys(
+              gf.sigBandsFromKey(col("text"), 3, 32, 4, 8).getField("sig"), 4, 8)).as("band_key"))
           .orderBy("doc_id", "band_key"),
       s"""with corpus as (select doc_id, $sqlNorm as s from documents where doc_id < 10),
          |g as (select distinct doc_id, substr(s,i,3) as gram
@@ -490,31 +488,20 @@ object Queries {
          |select doc_id, (k//8)::VARCHAR || ':' || string_agg(mh, ',' order by k) as band_key
          |from sig group by doc_id, k//8 order by doc_id, band_key""".stripMargin),
 
-    // LSH candidate self-join (the O1 scale replacement). Built
-    // RELATIONALLY — explode grams, one md5 per (doc, gram) row, hash-agg
-    // min per k, band string-agg, self-join — i.e., the same shuffle shape
-    // as the oracle SQL. (A single nested expression would re-evaluate the
-    // md5/regex work per band x hash: higher-order functions are
-    // interpreted and re-run their argument per outer element.)
+    // LSH candidate self-join (the O1 scale replacement): the signature
+    // kernel's sig, 4 bands x 8 rows, self-joined per band. The join key is
+    // the band's exact signature rows, like the oracle's band strings — the
+    // kernel's 64-bit band token could collide and add a pair the oracle
+    // never produces.
     ("q_lsh_pairs",
       (s, dir) => {
-        val g = spreadSmall(docs(s, dir))
-          .select(col("doc_id"), explode(array_distinct(gf.shingles(col("text"), 3))).as("gram"))
-        val hp = g.select(
-          col("doc_id"),
-          (gf.h60(col("gram"), 1) % P).as("h1"),
-          (gf.h60(col("gram"), 17) % P).as("h2"))
-        // 32 partial-aggregated min expressions in ONE groupBy — no k-explode
-        // (an explode would shuffle numHashes x gram rows)
-        val minExprs = (0 until 32).map(k => min((col("h1") + lit(k) * col("h2")) % P).as(s"mh$k"))
-        val sig = hp.groupBy("doc_id").agg(minExprs.head, minExprs.tail: _*)
-        val bands = sig
-          .select(col("doc_id"), explode(array((0 until 4).map { b =>
-            struct(
-              lit(b).as("b"),
-              concat_ws(",", (0 until 8).map(r => col(s"mh${b * 8 + r}").cast("string")): _*).as("bk"))
-          }: _*)).as("band"))
-          .select(col("doc_id"), col("band.b").as("b"), col("band.bk").as("bk"))
+        val bands = spreadSmall(docs(s, dir))
+          .select(col("doc_id"),
+            gf.sigBandsFromKey(col("text"), 3, 32, 4, 8).getField("sig").as("sig"))
+          .filter(col("sig").isNotNull)
+          .select(col("doc_id"),
+            posexplode(array((0 until 4).map(b => slice(col("sig"), b * 8 + 1, 8)): _*))
+              .as(Seq("b", "bk")))
         val a = bands.select(col("b"), col("bk"), col("doc_id").as("a_id"))
         val bb = bands.select(col("b"), col("bk"), col("doc_id").as("b_id"))
         a.join(bb, Seq("b", "bk"))
@@ -541,7 +528,8 @@ object Queries {
       (s, dir) =>
         docs(s, dir)
           .filter(col("doc_id") < 20)
-          .select(col("doc_id"), gf.simhash60(gf.shingles(col("text"), 3)).as("simhash"))
+          .select(col("doc_id"),
+            gf.sigBandsFromKey(col("text"), 3, 1, 1, 1).getField("simhash").as("simhash"))
           .orderBy("doc_id"),
       s"""with corpus as (select doc_id, $sqlNorm as s from documents where doc_id < 20),
          |hs as (select doc_id, ('0x'||substr(md5(substr(s,i,3)),1,15))::BIGINT as h
@@ -852,7 +840,7 @@ object Queries {
           .unionByName(substr.select("a_id", "b_id"))
         val verts = s.read.parquet(s"$stateDir/members")
           .select(col("clip_id").as("id"))
-        graft.stage.Cluster.connectedComponents(verts, edges)
+        graft.stage.Cluster.connectedComponentsWithStats(verts, edges)._1
           .select(col("id").as("clip_id"), col("component"))
           .orderBy("clip_id")
       },

@@ -2,7 +2,7 @@ package graft.api
 
 import graft.conf.FuzzyConf
 import graft.io.TableIO
-import graft.stage.{Candidates, Cluster, FindStage, IndexBuild, IndexTables}
+import graft.stage.{Candidates, Cluster, FindStage, IndexBuild, IndexTables, SmallInput}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,6 +14,12 @@ import org.apache.spark.sql.functions._
   * `checkpointDir` every derived table is written once and resumed
   * idempotently by config-hash (north rule: "resumable from checkpoint with
   * per-partition lineage + metrics").
+  *
+  * `idCol` values must be UNIQUE across `input` (one row per id): the
+  * members table then holds one row per id, and [[clusters]] hands it to
+  * connected components with `verticesDistinct = true`, skipping the
+  * exchange that would re-prove it. A repeated id is not detected; it
+  * comes back as repeated (clip_id, component) rows.
   *
   * {{{
   * val p = FuzzyPipeline(spark, clips, "clip_id", "transcript", FuzzyConf())
@@ -72,24 +78,11 @@ final case class FuzzyPipeline(
     */
   lazy val index: IndexTables =
     IndexBuild(input, idCol, textCol, conf, (stage, df) => ckpt(stage)(df),
-      spreadParallelism = smallCorpusSpread)
-
-  /** Below this optimizer-estimated input size the corpus counts as SMALL
-    * and compute-dense posting scans may be spread over cluster width by an
-    * explicit exchange (FindStage.cascade): AQE coalesces their byte-tiny
-    * shuffles to 1-2 partitions while the per-row work (gram join fanout,
-    * Levenshtein) is CPU-dense, serializing seconds of compute onto one
-    * core. The exchange's cost is bounded by this gate; inputs with
-    * UNKNOWN stats (typed Dataset maps — stats default to huge) and real
-    * corpora keep 0 and the query plans are unchanged.
-    */
-  private val smallCorpusSpreadBytes = 64L << 20
-  private def smallCorpusSpread: Int = {
-    val est =
-      try input.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
-    if (est <= smallCorpusSpreadBytes) spark.sparkContext.defaultParallelism else 0
-  }
+      // a SMALL corpus may spread its compute-dense posting scans over
+      // cluster width (FindStage.cascade); real corpora keep 0 and their
+      // query plans are unchanged
+      spreadParallelism =
+        if (SmallInput(input)) spark.sparkContext.defaultParallelism else 0)
 
   // ---- reference query API (Simple.hs) ---------------------------------
 

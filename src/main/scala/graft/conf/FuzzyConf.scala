@@ -23,16 +23,22 @@ package graft.conf
   *                       Levenshtein rerank (`Internal.hs:90` - take 50)
   * @param minhashHashes  number of MinHash permutations (= bands * rowsPerBand)
   * @param minhashBands   LSH band count
-  * @param rowsPerBand    MinHash rows per band; candidate-probability curve
-  *                       is 1 - (1 - j^r)^b for Jaccard j. Defaults b=21,
-  *                       r=6 put the S-curve threshold at (1/21)^(1/6) ~
-  *                       0.60: catch probability 0.998 at j = 0.8 (a
-  *                       single-char edit of a short transcript keeps
-  *                       j >= 0.8), while vocabulary-level similarity
-  *                       (j ~ 0.4) collides with probability < 0.09 —
-  *                       token-drop/append dups at lower j are covered by
-  *                       the exact-substring pass, byte-identical ones by
-  *                       the exact pass
+  * @param rowsPerBand    MinHash rows per band. With independent hash
+  *                       functions the candidate probability would be the
+  *                       S-curve 1 - (1 - j^r)^b for Jaccard j; defaults
+  *                       b=21, r=6 put its threshold at (1/21)^(1/6) ~
+  *                       0.60, and vocabulary-level similarity (j ~ 0.4)
+  *                       collides with probability < 0.09. The signature
+  *                       family (h1 + k*h2) mod P is NOT independent
+  *                       across components k: one gram can own a long run
+  *                       of them (36 of 126 in a recorded miss), so one
+  *                       edit that removes it moves many components at
+  *                       once and near pairs miss more often than the
+  *                       curve says — 2 of 66,641 planted single-typo
+  *                       pairs shared no band where the curve expects
+  *                       0.05 (CHANGES.md). Token-drop/append dups at
+  *                       lower j are covered by the exact-substring pass,
+  *                       byte-identical ones by the exact pass
   * @param simhashBits    SimHash fingerprint width (64 = one long)
   * @param seed           base seed for all hash families (deterministic)
   * @param maxBandBucket  rows sharing one LSH band value before the bucket

@@ -38,68 +38,29 @@ object Ann {
 
   /** Plane entry (p,d): md5-derived int in [-1000, 1000]. Computed
     * driver-side (java MessageDigest md5 == Spark md5 == DuckDB md5) and
-    * shipped as literals, so executors pay zero hashing per row.
+    * shipped in the broadcast plane table, so executors pay zero hashing
+    * per row.
     */
   def planeEntry(p: Int, d: Int): Long =
     graft.sql.PortableHash.h60(s"$p:$d", 1) % 2001 - 1000
 
-  /** Above this many plane-table entries (dim x planes) the literal-array
-    * form is abandoned: each entry is a Catalyst literal, so at dim 1024+
-    * the plan text/serialization bloats with tens of thousands of nodes
-    * per bucket column (round-3 verdict watch item). Round 6 lowered the
-    * limit 1024 → 128: at dim 64 × 8 planes × 3 bands × 2 join sides the
-    * literal form planned/codegen'd 3072 literal nodes per query — a
-    * measured multi-second one-time compile on q_embed_lsh_topk — and its
-    * per-element aggregate() lambdas run in the HOF interpreter besides;
-    * the broadcast+tight-loop arm is bit-identical (AnnSpec pins parity on
-    * clean AND dirty rows) and both compiles and evaluates faster. The
-    * literal arm remains for genuinely tiny plane tables, where a
-    * broadcast would be pure overhead.
-    */
-  private[embed] val literalPlaneLimit = 128
-
   /** Sign-bit bucket id over `planes` hyperplanes for a quantized vector:
     * bit p set iff sum_d v[d] * entry(g,d) >= 0, with g = band*planes + p
     * (so each band draws an INDEPENDENT set of hyperplanes from the same
-    * md5 family). Small plane tables (dim x planes <= 1024 entries, e.g.
-    * the dim-64 driver queries) ship as literal arrays — constant-folded,
-    * DuckDB-reproducible from the plan text alone; larger tables switch to
-    * a broadcast integer plane table read by a one-pass UDF
-    * (value-identical — AnnSpec pins the parity — and the UDF also dodges
-    * the per-element HOF interpreter).
+    * md5 family). The plane matrix is computed once on the driver and
+    * shipped once per executor via a broadcast; a UDF does one tight
+    * integer pass per row. Plan size stays O(1) in dim x planes — literal
+    * plane arrays bloated the plan with a Catalyst node per entry (a
+    * measured multi-second one-time compile on q_embed_lsh_topk) and ran
+    * per-element aggregate() lambdas in the HOF interpreter.
     */
   def lshBucket(vq: Column, dim: Int, planes: Int, band: Int = 0): Column = {
     // 63 is the honest Long capacity: plane 63 would set the sign bit
     // (negative bucket keys, breaking the documented [0, 2^planes) range),
-    // and at planes >= 65 the shift wraps mod 64 — plane 64 aliases bit 0,
-    // the literal form's sum-of-bits CARRIES into bit 1 while the broadcast
-    // form ORs, two silently-different (and both wrong) buckets. More bits
-    // per band than this are pointless anyway: split into more bands.
+    // and at planes >= 65 the shift wraps mod 64 — plane 64 would alias
+    // bit 0. More bits per band than this are pointless anyway: split into
+    // more bands.
     require(planes >= 1 && planes <= 63, s"planes must be in [1,63], got $planes")
-    if (dim * planes <= literalPlaneLimit) lshBucketLiteral(vq, dim, planes, band)
-    else lshBucketBroadcast(vq, dim, planes, band)
-  }
-
-  /** Literal-array form (plan size O(dim x planes)). */
-  private[embed] def lshBucketLiteral(vq: Column, dim: Int, planes: Int, band: Int): Column = {
-    val bits = (0 until planes).map { p =>
-      val plane = array((0 until dim).map(d => lit(planeEntry(band * planes + p, d))): _*)
-      val proj = aggregate(
-        zip_with(vq, plane, (v, e) => v * e),
-        lit(0L),
-        (s, x) => s + x)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Broadcast-plane form (plan size O(1)): the plane matrix is computed
-    * once on the driver and shipped once per executor via a broadcast; the
-    * UDF does one tight integer pass per row. Same md5-derived entries,
-    * same integer math, so bucket values match [[lshBucketLiteral]]
-    * bit-for-bit.
-    */
-  private[embed] def lshBucketBroadcast(vq: Column, dim: Int, planes: Int, band: Int): Column = {
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
     // one broadcast per DISTINCT plane table per context — bucketedTopK
     // calls this once per band per side, and a fresh broadcast per call
@@ -129,10 +90,8 @@ object Ann {
       (sc.startTime, band, planes, dim),
       _ => sc.broadcast(Array.tabulate(planes, dim)((p, d) => planeEntry(band * planes + p, d))))
     val bucketUdf = udf { (v: Seq[java.lang.Long]) =>
-      // mirror the literal form on dirty rows: there, a null vector, a
-      // null element, or any length mismatch null-propagates every
-      // projection (zip_with pads with null) and when(null >= 0) takes
-      // the otherwise-0 branch — bucket 0, not a task failure
+      // dirty rows — a null vector, a null element, or any length
+      // mismatch — land in bucket 0 instead of failing the task
       if (v == null || v.length != dim || v.contains(null)) 0L
       else {
         val pt = bc.value

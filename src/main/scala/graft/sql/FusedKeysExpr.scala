@@ -13,11 +13,12 @@ import org.apache.spark.sql.types._
   * Native instead of a UDF because this explode is the flagship's largest
   * row fanout (bands + 4 keys per corpus row): the tuple-returning UDF it
   * replaces boxed the band array in and a Tuple2 per key out through the
-  * Scala converter. Key VALUES are unchanged — band hashes pass through
-  * verbatim, chunk keys are the same shifted 15-bit slices offset by
-  * c << 15 (see Candidates.chunkKey) — so bucket contents, and therefore
-  * the emitted pair set, still match the separate lshPairs/simhashPairs
-  * passes exactly (CandidatesSpec pins the union equality).
+  * Scala converter. Band hashes pass through verbatim; chunk key c is the
+  * c-th 15-bit slice of the fingerprint (LOGICAL shift — sign extension
+  * would fold the sign bit into every chunk) offset by c << 15 so the four
+  * positions never collide. Bucket contents, and therefore the emitted
+  * pair set, match separate band-only and chunk-only passes exactly
+  * (CandidatesSpec pins the union equality against test-scope references).
   */
 case class FusedKeysExpr(left: Expression, right: Expression) extends BinaryExpression {
 

@@ -68,11 +68,6 @@ object GraftExtensions {
       arity(args, 2, "graft_gram_counts")
       GramCountsExpr(args.head, intLit(args, 1, "graft_gram_counts"))
     },
-    d("graft_sig_bands", classOf[SigBandsExpr]) { args =>
-      arity(args, 4, "graft_sig_bands")
-      SigBandsExpr(args.head, intLit(args, 1, "graft_sig_bands"),
-        intLit(args, 2, "graft_sig_bands"), intLit(args, 3, "graft_sig_bands"))
-    },
     d("graft_sig_bands_from_key", classOf[SigBandsFromKeyExpr]) { args =>
       arity(args, 5, "graft_sig_bands_from_key")
       SigBandsFromKeyExpr(args.head, intLit(args, 1, "graft_sig_bands_from_key"),

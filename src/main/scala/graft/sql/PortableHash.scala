@@ -1,17 +1,17 @@
 package graft.sql
 
-/** Driver/executor-side implementation of the portable md5 hash family —
-  * value-identical to the column expressions in [[functions]] (md5 of
-  * UTF-8, first/second 15 hex chars -> 60-bit longs, mod P double-hashing)
-  * and therefore to the DuckDB oracle SQL.
+/** The portable md5 hash family behind every signature: md5 of UTF-8,
+  * first/second 15 hex chars -> 60-bit longs, mod P double hashing —
+  * reproducible bit-for-bit by the DuckDB oracle SQL.
   *
-  * Exists because the expression form of the signature computation cannot
-  * keep the per-gram md5 work out of the per-component lambda: Catalyst
-  * inlines single-use projection aliases back into the consuming lambda
-  * (CollapseProject), and higher-order functions re-evaluate their array
-  * argument on every outer element — measured 25x slowdown on the index
-  * build. One tight Scala pass per row is both exact and fast; the column
-  * versions remain for query-scale use and are parity-tested against this.
+  * Holds the per-row accumulator and band mixing of the signature kernel
+  * ([[SigBandsFromKeyExpr]]) and the driver-side [[h60]] that derives
+  * Ann's hyperplane entries. One tight Scala pass per row, not a column
+  * expression: Catalyst inlines single-use projection aliases back into a
+  * consuming lambda (CollapseProject) and higher-order functions
+  * re-evaluate their array argument per outer element, so an expression
+  * form re-ran the per-gram md5 work per signature component — measured
+  * 25x slower on the index build.
   */
 object PortableHash {
 
@@ -57,9 +57,9 @@ object PortableHash {
     (v << 4) | ((d(off + 7) >> 4) & 0xfL)
   }
 
-  /** The thread's reusable md5 instance, reset — for kernels that stream
-    * window bytes directly (SigBandsFromKeyExpr) without a String or byte
-    * array per gram.
+  /** The thread's reusable md5 instance, reset — for the signature kernel,
+    * which streams window bytes directly without a String or byte array per
+    * gram.
     */
   private[sql] def md5Reset(): java.security.MessageDigest = {
     val md = digestTL.get()
@@ -67,40 +67,16 @@ object PortableHash {
     md
   }
 
-  /** MinHash signature over the DISTINCT gram set + SimHash over the gram
-    * MULTISET, one md5 pass per gram occurrence.
-    */
-  def sigAndSimhash(grams: Seq[String], numHashes: Int): (Array[Long], Long) = {
-    val state = new SigState(numHashes)
-    val seen = scala.collection.mutable.HashSet.empty[String]
-    grams.foreach { g =>
-      state.add(g.getBytes(java.nio.charset.StandardCharsets.UTF_8), seen.add(g))
-    }
-    (state.sig, state.simhash)
-  }
-
-  /** Streaming accumulator for one row's signature — shared by the
-    * Seq[String] entry point above and the native SigBandsExpr (which
-    * feeds raw UTF8String bytes, no JVM String per gram).
+  /** Streaming accumulator for one row's signature: MinHash over the
+    * distinct grams, SimHash balance over every occurrence.
     */
   final class SigState(numHashes: Int) {
     val sig: Array[Long] = Array.fill(numHashes)(Long.MaxValue)
     private val balance = new Array[Long](60)
 
-    /** Fold one gram occurrence (its UTF-8 bytes) into the state;
+    /** Fold one gram occurrence given its two 60-bit md5 words;
       * `distinct` = first occurrence of this gram in the row (minhash uses
       * the distinct set, simhash every occurrence).
-      */
-    def add(utf8: Array[Byte], distinct: Boolean): Unit = {
-      val md = digestTL.get()
-      md.reset()
-      val d = md.digest(utf8)
-      addWords(digest60(d, 0), digest60(d, 8), distinct)
-    }
-
-    /** Fold one gram occurrence given its two pre-parsed 60-bit md5 words
-      * (the form the streaming kernel produces without any per-gram
-      * allocation).
       */
     def addWords(h1full: Long, h2full: Long, distinct: Boolean): Unit = {
       // simhash uses every occurrence (multiset weights)

@@ -3,26 +3,37 @@ package graft.sql
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The whole signature kernel — normalize, enclose, window into n-grams,
-  * MinHash + SimHash + band tokens — fused into ONE streaming pass over the
-  * key, so the gram array never materializes: no UTF8String per window
-  * (ShinglesExpr allocates one per gram occurrence — ~|key| objects per
-  * corpus row), no per-gram byte copies on the ASCII fast path (md5 updates
+/** The engine's one signature kernel — normalize, enclose, window into
+  * n-grams, MinHash + SimHash + band tokens — fused into ONE streaming pass
+  * over the key, so the gram array never materializes: no UTF8String per
+  * window, no per-gram byte copies on the ASCII fast path (md5 updates
   * straight from the row's single UTF-8 buffer, digests into a reused
-  * 16-byte scratch).
+  * 16-byte scratch). The index build, the streaming new-item pass, the
+  * signature inventory queries and `graft_sig_bands_from_key` all run it.
   *
-  * Value-identical to `SigBandsExpr(ShinglesExpr(key, n), ...)` — same
-  * normalization (graft.text.Gram), same CODE-POINT windowing (a window
+  * Output struct<sig, simhash, band_hashes>:
+  *  - sig: MinHash over the DISTINCT gram set, component k =
+  *    min_g (h1(g) + k * h2(g)) mod P, with h1/h2 the two 60-bit md5 words
+  *    of the gram's UTF-8 bytes reduced mod P (Kirsch-Mitzenmacher double
+  *    hashing — DuckDB reproduces it as
+  *    `('0x'||substr(md5(g), 1|17, 15))::BIGINT % P`);
+  *  - simhash: 60-bit SimHash over the gram MULTISET (bit b set iff more
+  *    occurrences have bit b of h1 set than clear);
+  *  - band_hashes: [[PortableHash.bandHashes]] of sig.
+  *
+  * Same normalization (graft.text.Gram) and CODE-POINT windowing (a window
   * never splits a surrogate pair — Gram.cpStartsOrNull — so every gram's
-  * UTF-8 bytes are well-formed in both paths), same md5 word parsing, same
-  * distinct-set minhash / multiset simhash — pinned by FunctionsSpec
-  * parity. Returns NULL when the normalized key has no n-gram (fewer than
-  * n code points after enclosure), mirroring the
-  * `size(shingles(key, n)) > 0` filter the index build applies.
+  * UTF-8 bytes are well-formed) as `Gram.grams`; FunctionsSpec pins the
+  * values against a scalar reference over `Gram.grams` on every key shape.
+  * Returns NULL when the normalized key has no n-gram (fewer than n code
+  * points after enclosure): the folded state of zero grams is a CONSTANT,
+  * so every gram-less row would otherwise share identical band tokens —
+  * one quadratic LSH bucket per band.
   *
   * Gram distinctness is keyed on the gram's md5 words (120 bits): two
   * DIFFERENT grams within one row colliding on all 120 bits would be
@@ -40,7 +51,7 @@ case class SigBandsFromKeyExpr(child: Expression, n: Int, numHashes: Int, bands:
     else TypeCheckResult.TypeCheckFailure(
       s"sig_bands_from_key expects a string column, got ${child.dataType.catalogString}")
 
-  override def dataType: DataType = SigBandsExpr.OutType
+  override def dataType: DataType = SigBandsFromKeyExpr.OutType
   override def nullable: Boolean = true // gram-less keys -> null
 
   override def nullSafeEval(input: Any): Any =
@@ -60,8 +71,18 @@ case class SigBandsFromKeyExpr(child: Expression, n: Int, numHashes: Int, bands:
 }
 
 object SigBandsFromKeyExpr {
+  val OutType: StructType = StructType(Seq(
+    StructField("sig", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("simhash", LongType, nullable = false),
+    StructField("band_hashes", ArrayType(LongType, containsNull = false), nullable = false)))
+
   /** Static entry point shared by interpreted eval and generated code.
-    * Returns null when the key yields no n-grams.
+    * Returns null when the key yields no n-grams. Declared InternalRow (not
+    * Any/Object): the generated code assigns the call result to an
+    * InternalRow-typed variable and Janino has no implicit
+    * Object→InternalRow conversion — an Any return type makes the generated
+    * class fail to compile and silently fall back to interpreted eval
+    * (CodegenCompileSpec).
     */
   def compute(u: UTF8String, n: Int, numHashes: Int, bands: Int, rowsPerBand: Int): InternalRow = {
     val s = graft.text.Gram.enclosedIn(graft.text.Gram.normalized(u.toString), '-')
@@ -111,6 +132,10 @@ object SigBandsFromKeyExpr {
       state.addWords(h1full, h2full, isNew)
       i += 1
     }
-    SigBandsExpr.pack(state, bands, rowsPerBand)
+    val row = new GenericInternalRow(3)
+    row.update(0, new GenericArrayData(state.sig))
+    row.setLong(1, state.simhash)
+    row.update(2, new GenericArrayData(PortableHash.bandHashes(state.sig, bands, rowsPerBand)))
+    row
   }
 }

@@ -14,16 +14,17 @@ import org.apache.spark.sql.{functions => F}
   *    `Utils.hs:26-30`)
   *  - levNormSim <-> `distance` (`Internal.hs:231-232`)
   *
-  * The MinHash/SimHash family uses a PORTABLE hash (md5 prefix -> 60-bit
-  * int, Kirsch-Mitzenmacher double hashing mod a 1e9-scale prime) so the
-  * DuckDB correctness oracle can reproduce signatures bit-for-bit in plain
-  * SQL. All arithmetic stays within signed-64 range: values < P ~ 1e9 and
-  * multipliers <= numHashes keep products < 2^63.
+  * Signatures (MinHash + SimHash + band tokens) come from ONE native
+  * kernel, [[sigBandsFromKey]], over the portable md5 family of
+  * [[PortableHash]] (md5 prefix -> 60-bit int, Kirsch-Mitzenmacher double
+  * hashing mod a 1e9-scale prime), so the DuckDB correctness oracle can
+  * reproduce signatures bit-for-bit in plain SQL.
   */
 object functions {
 
   /** Modulus for the portable hash family; small enough that
-    * k * (h % P) + (h % P) never overflows Long for k <= 4096.
+    * k * (h % P) + (h % P) never overflows Long for k <= 4096 (the oracle
+    * SQL computes (h1 + k*h2) % P directly).
     */
   val HashP: Long = 1000000007L
 
@@ -58,39 +59,16 @@ object functions {
     org.apache.spark.sql.GraftColumnBridge.column(
       GramCountsExpr(org.apache.spark.sql.GraftColumnBridge.expression(c), n))
 
-  /** MinHash signature + SimHash + LSH band tokens of a gram-multiset
-    * column in one native pass — struct<sig, simhash, band_hashes>. See
-    * [[SigBandsExpr]] for why this is not a UDF.
-    */
-  def sigBands(gramsCol: Column, numHashes: Int, bands: Int, rowsPerBand: Int): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      SigBandsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(gramsCol),
-        numHashes, bands, rowsPerBand))
-
-  /** [[sigBands]] fused with the shingling itself — one streaming pass over
-    * the KEY, the gram array never materializes; NULL for gram-less keys.
-    * See [[SigBandsFromKeyExpr]].
+  /** MinHash signature + SimHash + LSH band tokens of a KEY column in one
+    * native streaming pass — struct<sig, simhash, band_hashes>, NULL for
+    * gram-less keys. The engine's only signature kernel; see
+    * [[SigBandsFromKeyExpr]].
     */
   def sigBandsFromKey(keyCol: Column, n: Int, numHashes: Int, bands: Int, rowsPerBand: Int): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       SigBandsFromKeyExpr(
         org.apache.spark.sql.GraftColumnBridge.expression(keyCol),
         n, numHashes, bands, rowsPerBand))
-
-  /** The pure-built-in composition of the same kernel — kept for the
-    * expression-parity tests and as documentation of the declarative form.
-    */
-  def shinglesBuiltin(c: Column, n: Int): Column = {
-    require(n >= 2, "gram size must be at least 2 (Internal.hs:193)")
-    val s = enclosed(normText(c))
-    F.when(
-      F.length(s) >= n,
-      F.transform(
-        F.sequence(F.lit(1), F.length(s) - (n - 1)),
-        i => s.substr(i, F.lit(n)))
-    ).otherwise(F.array().cast("array<string>"))
-  }
 
   /** Normalized Levenshtein SIMILARITY (Internal.hs:231-232):
     * 1 - edits/max(len); both-empty => 1.0.
@@ -100,51 +78,6 @@ object functions {
     F.when(maxLen === 0, F.lit(1.0))
       .otherwise(F.lit(1.0) - F.levenshtein(a, b).cast("double") / maxLen.cast("double"))
   }
-
-  /** 60-bit positive int from 15 hex chars of md5, offset 1 or 17 within the
-    * 32-char digest. Portable: DuckDB `('0x' || substr(md5(x), off, 15))::BIGINT`.
-    */
-  def h60(c: Column, off: Int): Column = {
-    require(off == 1 || off == 17)
-    F.conv(F.substring(F.md5(c), off, 15), 16, 10).cast("long")
-  }
-
-  /** Per-distinct-gram hash pairs (h1, h2) — the md5 work of a MinHash
-    * signature, exactly once per gram. MATERIALIZE THIS AS A COLUMN (its
-    * own withColumn/select) before feeding it to [[minhashFromHashes]]:
-    * if the md5 expression is nested inside the signature lambda instead,
-    * Catalyst re-evaluates it for every one of the numHashes outputs
-    * (measured 25x slowdown on the index build).
-    */
-  def gramHashPairs(gramsCol: Column): Column =
-    F.transform(
-      F.array_distinct(gramsCol),
-      g => F.struct((h60(g, 1) % HashP).as("h1"), (h60(g, 17) % HashP).as("h2")))
-
-  /** MinHash signature from a materialized [[gramHashPairs]] column:
-    * hash_k(g) = (h1(g) + k * h2(g)) mod P (Kirsch-Mitzenmacher).
-    * An EMPTY array folds to Long.MaxValue components (array_min of an
-    * empty array is SQL NULL), keeping this form value-identical to
-    * PortableHash.sigAndSimhash's fold identity for gram-less rows; a
-    * NULL input stays NULL — manufacturing the identity for NULL rows
-    * would give them all the same real signature and identical band
-    * tokens, one quadratic LSH bucket per band.
-    */
-  def minhashFromHashes(hashPairs: Column, numHashes: Int): Column =
-    F.when(hashPairs.isNotNull,
-      F.transform(
-        F.sequence(F.lit(0), F.lit(numHashes - 1)),
-        k =>
-          F.coalesce(
-            F.array_min(
-              F.transform(hashPairs, h => (h.getField("h1") + k * h.getField("h2")) % HashP)),
-            F.lit(Long.MaxValue))))
-
-  /** One-shot convenience for small/query-scale inputs; index builds use
-    * the two-step gramHashPairs -> minhashFromHashes split instead.
-    */
-  def minhashSig(gramsCol: Column, numHashes: Int): Column =
-    minhashFromHashes(gramHashPairs(gramsCol), numHashes)
 
   /** Estimated Jaccard from two MinHash signatures: fraction of agreeing
     * components (stderr ~ sqrt(j(1-j)/H)). Native codegen expression
@@ -159,8 +92,10 @@ object functions {
         org.apache.spark.sql.GraftColumnBridge.expression(sigA),
         org.apache.spark.sql.GraftColumnBridge.expression(sigB)))
 
-  /** LSH band keys: array of `bands` strings "<band>:<sig[b*r]>,...". A band
-    * key equality <=> the r signature rows in that band all agree.
+  /** LSH band keys of a signature column: array of `bands` strings
+    * "<band>:<sig[b*r]>,...". A band key equality <=> the r signature rows
+    * in that band all agree — the readable, oracle-reproducible form of
+    * the kernel's 64-bit band_hashes.
     */
   def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
     F.transform(
@@ -174,41 +109,6 @@ object functions {
               F.slice(sig, b * rowsPerBand + 1, F.lit(rowsPerBand)),
               v => v.cast("string")),
             ",")))
-
-  /** 60-bit SimHash over the gram MULTISET (array repetitions = weights).
-    * bit b of h(g) = (h // 2^b) % 2; fingerprint bit b set iff
-    * sum_g (2*bit_b(h(g)) - 1) > 0. Built-ins only; DuckDB replicates with
-    * list comprehensions + integer division.
-    */
-  /** Per-occurrence gram hashes (multiset!) — md5 work of SimHash, once
-    * per gram occurrence. Materialize as a column like [[gramHashPairs]].
-    */
-  def gramHashes(gramsCol: Column): Column =
-    F.transform(gramsCol, g => h60(g, 1))
-
-  /** SimHash from a materialized [[gramHashes]] column.
-    * bit_b(h) = (h mod 2^(b+1)) >= 2^b — exact long arithmetic throughout
-    * (shiftright only takes a literal shift; double division would lose
-    * bits above 2^53). pow2 literals indexed by the lambda variable.
-    */
-  def simhashFromHashes(hs: Column): Column = {
-    val pow2 = F.array((0 to 60).map(b => F.lit(1L << b)): _*)
-    F.aggregate(
-      F.sequence(F.lit(0), F.lit(59)),
-      F.lit(0L),
-      (acc, b) => {
-        val p = F.element_at(pow2, b + 1)
-        val p2 = F.element_at(pow2, b + 2)
-        val balance = F.aggregate(
-          hs,
-          F.lit(0L),
-          (s, h) => s + F.when(h % p2 >= p, 1L).otherwise(-1L))
-        acc + F.when(balance > 0, p).otherwise(F.lit(0L))
-      })
-  }
-
-  /** One-shot convenience for query-scale inputs. */
-  def simhash60(gramsCol: Column): Column = simhashFromHashes(gramHashes(gramsCol))
 
   /** Hamming distance between two simhash fingerprints. */
   def hamming(a: Column, b: Column): Column = F.bit_count(a.bitwiseXOR(b))

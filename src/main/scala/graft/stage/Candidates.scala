@@ -33,7 +33,8 @@ object Candidates {
         lit(1.0).as("score"))
 
   /** All unordered (a_id < b_id) pairs of item_ids sharing a bucket key,
-    * with three skew regimes by bucket size m (north rule: "salted
+    * over a mixed key space: `keyed` has columns (bkey, ktype, item_id,
+    * sh). Three skew regimes by bucket size m (north rule: "salted
     * repartitioning for skewed shingle bands"):
     *
     *  - m <= cap: direct in-bucket self-join — at most ~cap^2 candidate
@@ -46,30 +47,17 @@ object Candidates {
     *    chunk; a < b filter halves), but per-task work is bounded by
     *    saltChunk x m instead of m^2 serializing in one task;
     *  - m > maxSalted: STAR — each member pairs with the bucket minimum
-    *    only (see FuzzyConf.maxSaltedBucket and [[taggedSelfPairs]]).
+    *    only (see FuzzyConf.maxSaltedBucket and below).
     *
-    * `keyed` must have columns (bkey, item_id).
-    */
-  private[stage] def bucketSelfPairs(
-      keyed: DataFrame,
-      cap: Int,
-      saltChunk: Int,
-      maxSalted: Int,
-      scratch: Scratch = Scratch.noop): DataFrame =
-    taggedSelfPairs(
-      keyed.select(col("bkey"), lit(0).as("ktype"), col("item_id"), lit(0L).as("sh")),
-      cap, saltChunk, maxSalted, maxHamming = 0, scratch)
-
-  /** [[bucketSelfPairs]] generalized to a mixed key space: `keyed` has
-    * columns (bkey, ktype, item_id, sh). Rows with ktype = 1 are SimHash
-    * chunk keys carrying the full fingerprint in `sh`; pairs from those
-    * buckets are kept only at hamming(a_sh, b_sh) <= maxHamming, and the
-    * filter runs BEFORE the pair distinct. That placement is the scale
-    * lever: at corpus size n the raw 15-bit-chunk collision volume is
-    * ~n^2/2^15 pairs (~8M rows at 400k items), and round 2 shuffled all of
-    * it through a distinct plus two signature re-joins before filtering —
-    * here the xor/bit_count runs inside the join stage and only survivors
-    * (plus LSH pairs) reach the distinct.
+    * Rows with ktype = 1 are SimHash chunk keys carrying the full
+    * fingerprint in `sh`; pairs from those buckets are kept only at
+    * hamming(a_sh, b_sh) <= maxHamming, and the filter runs BEFORE the pair
+    * distinct. That placement is the scale lever: at corpus size n the raw
+    * 15-bit-chunk collision volume is ~n^2/2^15 pairs (~8M rows at 400k
+    * items), and round 2 shuffled all of it through a distinct plus two
+    * signature re-joins before filtering — here the xor/bit_count runs
+    * inside the join stage and only survivors (plus LSH pairs) reach the
+    * distinct.
     *
     * Buckets beyond maxSalted enter the STAR regime (round 2 dropped
     * them): each member pairs with the bucket minimum only — |bucket|
@@ -118,15 +106,9 @@ object Candidates {
         // a/b sides of the pair self-join read those blocks instead of each
         // re-running the full sigs-scan + key explode + broadcast join
         // (guide §1.2 "don't recompute"; interleaved A/B at 1.6M clips:
-        // 13.5-17.1 s -> 9.8-12.1 s for the candidates stage, same pairs).
-        // Seam: graft.cand.withn / GRAFT_CAND_WITHN = "nomat" restores the
-        // recompute-per-branch arm for A/Bs.
-        val withNMode = sys.props.get("graft.cand.withn")
-          .orElse(sys.env.get("GRAFT_CAND_WITHN"))
-        if (withNMode.contains("nomat")) joined
-        else
-          scratch.track(joined.localCheckpoint(false,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        // 13.5-17.1 s -> 9.8-12.1 s for the candidates stage, same pairs)
+        scratch.track(joined.localCheckpoint(false,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
       } else
         scratch.track(keyed.join(sizes, Seq("bkey", "ktype"))
           .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
@@ -192,17 +174,6 @@ object Candidates {
     unioned.distinct()
   }
 
-  /** Unordered candidate pairs (a_id < b_id) from LSH band collisions. */
-  def lshPairs(
-      bands: DataFrame,
-      maxBandBucket: Int,
-      saltChunk: Int = 64,
-      maxSaltedBucket: Int = 4096,
-      scratch: Scratch = Scratch.noop): DataFrame =
-    bucketSelfPairs(
-      bands.select(col("band_key").as("bkey"), col("item_id")),
-      maxBandBucket, saltChunk, maxSaltedBucket, scratch)
-
   /** Above this many contained-side keys the sorted prefix-hash array can
     * no longer broadcast (~8 bytes/key: 20M keys = 160 MB) and the
     * substring pass falls back to the generic explode-join.
@@ -220,32 +191,6 @@ object Candidates {
     * FindStage's broadcastPairLimit).
     */
   private val substringPairBroadcastLimit = 1000000L
-
-  /** A/B seam: "off" restores the round-5 recompute/SMJ arms of the
-    * substring pass (lazy matches, un-materialized candidate pairs).
-    */
-  private def substrMatOff: Boolean =
-    sys.props.get("graft.substr.mat")
-      .orElse(sys.env.get("GRAFT_SUBSTR_MAT")).contains("off")
-
-  /** Below this optimizer-estimated items size the substring pass keeps
-    * its lazy round-5 plan: the materialize + count jobs that pay for
-    * themselves on a corpus-scale input (one fewer full window-hash pass,
-    * no corpus sorts) cost MORE than they save on a query-scale one
-    * (measured +1 s on q_substr_pairs' 3 extra jobs at sf0.1). Inputs with
-    * UNKNOWN stats (checkpointed RDDs — the flagship/stream shape) default
-    * to huge and take the materialized arm; parquet-backed query inputs
-    * report real (small) stats and keep the old plan. Same gate pattern as
-    * the small-corpus spread (Queries.spreadSmall / FuzzyPipeline).
-    */
-  private val substrMatMinBytes = 64L << 20
-  private def substrLazy(items: DataFrame): Boolean =
-    substrMatOff || {
-      val est =
-        try items.queryExecution.optimizedPlan.stats.sizeInBytes
-        catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
-      est <= substrMatMinBytes
-    }
 
   /** Exact substring-containment pairs — the distributed realization of
     * the north rule's suffix-array pass (SURVEY §7.4). A key `a` is a
@@ -273,8 +218,23 @@ object Candidates {
     *    equi-joined against the contained prefixes — all-shuffle, no
     *    driver-side state, the 10^12-scale shape.
     *
+    * Query-scale inputs ([[SmallInput]]) keep the lazy plan: the
+    * materialize + count jobs that pay for themselves on a corpus-scale
+    * input (one fewer full window-hash pass, no corpus sorts) cost MORE
+    * than they save on a query-scale one (measured +1 s on q_substr_pairs'
+    * 3 extra jobs at sf0.1). Inputs with unknown stats (checkpointed RDDs —
+    * the flagship/stream shape) take the materialized arm.
+    *
     * Emits (a_id=contained, b_id=container, kind="substr",
     * score=len(a)/len(b)) for score >= minRatio.
+    *
+    * NOTE: the pass local-checkpoints intermediate tables (window hits and
+    * candidate pairs on corpus-scale input, exploded windows in the
+    * explode-join and short-key regimes). With the default
+    * [[Scratch.noop]] those blocks stay pinned for the SparkContext
+    * lifetime — fine for a one-shot call, but a long-lived driver calling
+    * this repeatedly must pass its own `scratch` and `release()` it once
+    * the returned pairs are materialized (FuzzyPipeline does).
     */
   def substringPairs(
       items: DataFrame,
@@ -282,10 +242,9 @@ object Candidates {
       minRatio: Double,
       maxBucket: Int,
       scratch: Scratch = Scratch.noop): DataFrame = {
-    // query-scale inputs keep the lazy round-5 plan; corpus-scale (or
-    // unknown-stats) inputs take the materialized/hinted arms below —
-    // see substrLazy's scaladoc
-    val lazyPlan = substrLazy(items)
+    // query-scale inputs keep the lazy plan; corpus-scale (or
+    // unknown-stats) inputs take the materialized/hinted arms below
+    val lazyPlan = SmallInput(items)
     val keyed = items.select(col("item_id"), col("key"), length(col("key")).as("klen"))
     val longK = keyed.filter(col("klen") >= prefixLen)
     val contained = longK
@@ -323,9 +282,7 @@ object Candidates {
         // re-runs the full corpus scan + per-window hash/binary-search UDF
         // pass. The hits hold only MATCHING windows — candidate-volume
         // sized, tiny next to the corpus — so the blocks are cheap by
-        // construction in this (broadcast) regime. Seam:
-        // graft.substr.mat/GRAFT_SUBSTR_MAT = "off" restores the
-        // recompute-per-consumer arm for A/Bs.
+        // construction in this (broadcast) regime.
         if (lazyPlan) hits
         else scratch.track(hits.localCheckpoint(false,
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
@@ -520,45 +477,24 @@ object Candidates {
       out.toArray
     }
 
-  /** SimHash chunk key for chunk position c: the c-th 15-bit slice of the
-    * fingerprint, offset into its own range so the four positions never
-    * collide. Logical (unsigned) shift: arithmetic sign extension would
-    * fold the sign bit into every chunk and split buckets for pairs whose
-    * fingerprints differ only at bit 63 (a 1-bit hamming miss in round 2's
-    * `%`-based string keys).
-    */
-  private def chunkKey(sh: org.apache.spark.sql.Column, c: Int) =
-    shiftrightunsigned(sh, 15 * c).bitwiseAND(lit(0x7fffL)) + lit(c.toLong << 15)
-
-  /** Unordered candidate pairs from SimHash chunk collisions at
-    * hamming distance <= maxHamming (pigeonhole over 4 x 15-bit chunks:
-    * <= 3 differing bits leave at least one chunk identical). Shares the
-    * three-regime skew handling of [[taggedSelfPairs]]; the hamming filter
-    * runs inside the bucket join, before the pair distinct.
-    */
-  def simhashPairs(
-      sigs: DataFrame,
-      maxHamming: Int,
-      maxBandBucket: Int,
-      saltChunk: Int = 64,
-      maxSaltedBucket: Int = 4096,
-      scratch: Scratch = Scratch.noop): DataFrame = {
-    val chunked = sigs.select(
-      explode(array((0 until 4).map(c => chunkKey(col("simhash"), c)): _*)).as("bkey"),
-      lit(1).as("ktype"),
-      col("item_id"),
-      col("simhash").as("sh"))
-    taggedSelfPairs(chunked, maxBandBucket, saltChunk, maxSaltedBucket, maxHamming, scratch)
-  }
-
-  /** LSH band keys and SimHash chunk keys fused into ONE keyed table ->
-    * one bucket-size aggregation, one materialization, one self-join, one
-    * distinct — half the candidate-generation stage chain of running
-    * [[lshPairs]] and [[simhashPairs]] separately. The serial length of
-    * that chain is what bounds single-box (and per-executor) scaling; the
-    * work per stage is identical. Band keys and chunk keys live in
-    * disjoint (bkey, ktype) spaces, so bucket contents — and therefore the
-    * emitted pair set — match the separate passes exactly.
+  /** Unordered candidate pairs from LSH band collisions and SimHash chunk
+    * collisions at hamming distance <= maxHamming (pigeonhole over 4 x
+    * 15-bit chunks: <= 3 differing bits leave at least one chunk
+    * identical), fused into ONE keyed table -> one bucket-size
+    * aggregation, one materialization, one self-join, one distinct — half
+    * the candidate-generation stage chain of running the two passes
+    * separately. The serial length of that chain is what bounds single-box
+    * (and per-executor) scaling; the work per stage is identical. Band keys
+    * and chunk keys live in disjoint (bkey, ktype) spaces, so bucket
+    * contents — and therefore the emitted pair set — match the separate
+    * passes exactly (CandidatesSpec pins the union equality).
+    *
+    * NOTE: pair generation local-checkpoints the bucket directory and the
+    * pruned keyed-with-size table. With the default [[Scratch.noop]] those
+    * blocks stay pinned for the SparkContext lifetime — fine for a
+    * one-shot call, but a long-lived driver calling this repeatedly must
+    * pass its own `scratch` and `release()` it once the returned pairs are
+    * materialized (FuzzyPipeline does).
     */
   def fusedPairs(
       sigs: DataFrame,
@@ -589,27 +525,6 @@ object Candidates {
       .select(col("k.bkey").as("bkey"), col("k.ktype").as("ktype"), col("item_id"), col("sh"))
   }
 
-  /** Unordered candidate pairs TOUCHING the `newSigs` side — signature-table
-    * convenience form of [[incrementalPairsFromKeys]] (both sides pay the
-    * fused-key explode here; the streaming pipeline maintains a persistent
-    * key table instead and calls the keys form directly).
-    *
-    * NOTE: pair generation local-checkpoints the pruned key-state
-    * membership internally. With the default [[Scratch.noop]] those blocks
-    * stay pinned for the SparkContext lifetime — fine for a one-shot call,
-    * but a long-lived driver calling this per micro-batch must pass its
-    * own `scratch` and `release()` it once the returned pairs are
-    * materialized, or the pinned blocks grow by one pruned-state-sized set
-    * per batch (StreamDedup.processBatch does exactly that).
-    */
-  def incrementalPairs(
-      newSigs: DataFrame,
-      allSigs: DataFrame,
-      maxHamming: Int,
-      maxBucket: Int,
-      scratch: Scratch = Scratch.noop): DataFrame =
-    incrementalPairsFromKeys(fusedKeyed(newSigs), fusedKeyed(allSigs), maxHamming, maxBucket, scratch)
-
   /** Candidate pairs touching the batch side, over fused-KEY tables
     * (bkey, ktype, item_id, sh): `newKeys` the arriving batch's keys,
     * `allKeys` the accumulated key state INCLUDING the batch (key state is
@@ -629,7 +544,10 @@ object Candidates {
     * the same semi-join prunes at the metadata level. The pruned
     * membership is localCheckpointed (two consumers: the bucket directory
     * and the direct join) and `scratch`-tracked for release once the
-    * caller materializes the pairs.
+    * caller materializes the pairs: a long-lived driver calling this per
+    * micro-batch with the default [[Scratch.noop]] would grow its pinned
+    * blocks by one pruned-state-sized set per batch (StreamDedup
+    * .processBatch passes and releases its own).
     *
     * Skew: the probe side is per-member, so fanout is LINEAR in bucket
     * size (the self-join's quadratic salted middle regime has no

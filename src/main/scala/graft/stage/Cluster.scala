@@ -29,8 +29,10 @@ object Cluster {
     GraftColumnBridge.checkpointedRdd(df).foreach(_.unpersist(blocking = false))
 
   /** edges: (a_id, b_id) undirected; vertices: one column `id` (superset of
-    * edge endpoints). Returns (id, component) where component = min id in
-    * the component.
+    * edge endpoints). Returns ((id, component), iterations) where component
+    * = min id in the component and iterations = the number of
+    * label-propagation rounds run — the O(log d) pointer-jumping claim is
+    * pinned by ClusterSpec on a depth-10^4 chain graph.
     *
     * The loop iterates over edge ENDPOINTS only: a vertex with no edge can
     * never change label, so the (typically corpus-sized) singleton set
@@ -39,52 +41,34 @@ object Cluster {
     * Isolated PAIRS (both endpoints degree 1 — the dominant duplicate
     * shape in web dedup) are contracted to min(src,dst) before the loop,
     * so only the residual multi-edge subgraph iterates at all.
-    */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame =
-    connectedComponentsWithStats(vertices, edges, maxIter)._1
-
-  /** [[connectedComponents]] plus the number of label-propagation
-    * iterations run — the O(log d) pointer-jumping claim is pinned by
-    * ClusterSpec on a depth-10^4 chain graph.
     *
-    * NOTE: the non-releasable overloads (this and [[connectedComponents]])
-    * discard the release hook, so the loop's surviving checkpoint blocks —
-    * the final label generation AND the contracted-pair labels, both
-    * endpoint-sized — stay pinned until the SparkContext ends. They are
-    * test/validation conveniences; production callers (FuzzyPipeline) use
+    * NOTE: this form discards the release hook, so the loop's surviving
+    * checkpoint blocks — the final label generation AND the
+    * contracted-pair labels, both endpoint-sized — stay pinned until the
+    * SparkContext ends. It is a test/validation convenience; production
+    * callers (FuzzyPipeline, StreamDedup) use
     * [[connectedComponentsReleasable]] and invoke the hook after durably
     * materializing the result.
     */
-  def connectedComponentsWithStats(
-      vertices: DataFrame,
-      edges: DataFrame,
-      maxIter: Int = 25): (DataFrame, Int) =
-    connectedComponentsWithStats(vertices, edges, maxIter, maxBroadcastEndpoints = 2000000L)
-
-  /** Test seam: `maxBroadcastEndpoints` gates the per-iteration broadcast
-    * label joins — ClusterSpec drives it to 0 to pin the shuffle-join
-    * regime that production only enters beyond 2M edge endpoints.
-    */
-  private[graft] def connectedComponentsWithStats(
-      vertices: DataFrame,
-      edges: DataFrame,
-      maxIter: Int,
-      maxBroadcastEndpoints: Long): (DataFrame, Int) = {
-    val (out, iter, _) =
-      connectedComponentsReleasable(vertices, edges, maxIter, maxBroadcastEndpoints)
+  def connectedComponentsWithStats(vertices: DataFrame, edges: DataFrame): (DataFrame, Int) = {
+    val (out, iter, _) = connectedComponentsReleasable(vertices, edges)
     (out, iter)
   }
 
-  /** Like [[connectedComponentsWithStats]] but also returns a release hook
-    * that unpersists the loop's surviving checkpoint blocks (the final
-    * label generation + the contracted-pair labels — both endpoint-sized,
-    * which at 10^12-row scale is real executor memory). The returned
-    * DataFrame is a plan OVER those blocks, so the hook must only run
-    * after the caller has durably materialized the result (e.g. a parquet
-    * checkpoint write); freeing earlier loses the labels — a locally
-    * checkpointed RDD's lineage is truncated and cannot recompute.
-    */
-  /** `verticesDistinct = true` promises every `vertices.id` is already
+  /** [[connectedComponentsWithStats]] plus a release hook that unpersists
+    * the loop's surviving checkpoint blocks (the final label generation +
+    * the contracted-pair labels — both endpoint-sized, which at
+    * 10^12-row scale is real executor memory). The returned DataFrame is a
+    * plan OVER those blocks, so the hook must only run after the caller
+    * has durably materialized the result (e.g. a parquet checkpoint
+    * write); freeing earlier loses the labels — a locally checkpointed
+    * RDD's lineage is truncated and cannot recompute.
+    *
+    * `maxBroadcastEndpoints` gates the per-iteration broadcast label joins
+    * (ClusterSpec drives it to 0 to pin the shuffle-join regime production
+    * only enters beyond 2M edge endpoints).
+    *
+    * `verticesDistinct = true` promises every `vertices.id` is already
     * unique (e.g. FuzzyPipeline's members table — one row per source row by
     * construction): the final labeling join then skips its `.distinct()`,
     * which on a corpus-sized vertex set is a full exchange + hash

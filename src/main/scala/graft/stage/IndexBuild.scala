@@ -27,7 +27,7 @@ final case class IndexTables(
     norms: DataFrame, // (item_id, gram_size, magnitude)
     sigs: DataFrame, // (item_id, sig: array<long>, simhash: long, band_hashes: array<long>)
     bands: DataFrame, // (item_id, band_key: long)
-    // When > 0, the corpus is PROVABLY SMALL (leaf-stats gate in
+    // When > 0, the corpus is PROVABLY SMALL (SmallInput gate in
     // FuzzyPipeline): compute-dense posting scans may be spread over this
     // many partitions by an explicit exchange. The cost of that exchange is
     // bounded by the small-input gate; a corpus-scale index keeps 0 and its
@@ -134,13 +134,13 @@ object IndexBuild {
     * window -> md5 fused, the gram array never materializes — the
     * pure-expression sig form re-ran md5s per component, the band-key HOF
     * composition interpreted at ~300us/row was round 2's hottest spot, and
-    * the UDF/ShinglesExpr forms allocated per gram occurrence);
-    * value-identical to the column expressions and the DuckDB oracle
-    * (FunctionsSpec parity). NULL ss = the key has no grams (empty
-    * normalized text): no signature, no LSH (all-empty sigs would
-    * otherwise bucket together and pair up); byte-identical empties still
-    * dedup via the exact pass. Shared by the batch build and the streaming
-    * per-batch new-item pass.
+    * the UDF/gram-array forms allocated per gram occurrence);
+    * value-identical to the DuckDB oracle's signature SQL (FunctionsSpec
+    * parity against a scalar reference, q_minhash_sig / q_simhash). NULL
+    * ss = the key has no grams (empty normalized text): no signature, no
+    * LSH (all-empty sigs would otherwise bucket together and pair up);
+    * byte-identical empties still dedup via the exact pass. Shared by the
+    * batch build and the streaming per-batch new-item pass.
     */
   def signatures(items: DataFrame, conf: FuzzyConf): DataFrame = items
     .select(col("item_id"),

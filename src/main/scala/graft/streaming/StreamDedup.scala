@@ -42,7 +42,7 @@ import org.apache.spark.storage.StorageLevel
   * exact + LSH/SimHash near-dups as clips arrive; a scheduled
   * FuzzyPipeline run (checkpointed, resumable) compacts and adds the
   * substring edges. Union-over-batches pair coverage vs the batch
-  * fusedPairs is argued at [[Candidates.incrementalPairs]]; label
+  * fusedPairs is argued at [[Candidates.incrementalPairsFromKeys]]; label
   * equality of the two paths on substring-free corpora is pinned by
   * StreamDedupSpec.
   */

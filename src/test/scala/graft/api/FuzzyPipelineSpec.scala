@@ -423,7 +423,7 @@ class FuzzyPipelineSpec extends AnyFunSuite with Matchers {
       .filter($"kind" === "fuzzy").select("a_id", "b_id").as[(String, String)]
       .collect().map { case (a, b) => norm2(a, b) }.toSet
     val sigOf: Map[String, Array[Long]] = corpus.zip(ids).map { case (t, id) =>
-      id -> graft.sql.PortableHash.sigAndSimhash(graft.text.Gram.grams(t, conf.gramHi), conf.minhashHashes)._1
+      id -> graft.sql.SigReference.sigAndSimhash(graft.text.Gram.grams(t, conf.gramHi), conf.minhashHashes)._1
     }.toMap
     def estJ(a: String, b: String): Double = {
       val (sa, sb) = (sigOf(a), sigOf(b))

@@ -88,25 +88,34 @@ class AnnSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("broadcast plane path matches the literal path bit-for-bit") {
-    // round-3 verdict watch item: above literalPlaneLimit entries lshBucket
-    // switches from literal arrays to a broadcast plane table + UDF — the
-    // two forms must produce identical buckets (same md5 entries, same
-    // integer math) or the oracle-pinned dim-64 queries and any high-dim
-    // run would disagree
+  /** Driver-side reference bucket: the documented sign-bit rule over
+    * [[Ann.planeEntry]] — bit p set iff sum_d v[d] * entry(band*planes+p, d)
+    * >= 0 — and bucket 0 for a dirty row (null vector, null element, length
+    * mismatch).
+    */
+  private def refBucket(v: Seq[java.lang.Long], dim: Int, planes: Int, band: Int): Long =
+    if (v == null || v.length != dim || v.contains(null)) 0L
+    else (0 until planes).foldLeft(0L) { (bits, p) =>
+      val proj = (0 until dim).map(d => v(d).longValue * Ann.planeEntry(band * planes + p, d)).sum
+      if (proj >= 0) bits | (1L << p) else bits
+    }
+
+  test("lshBucket matches a driver-side reference bit-for-bit") {
+    // the oracle-pinned dim-64 queries reproduce buckets in DuckDB from the
+    // same md5 plane entries and integer math — the broadcast UDF must
+    // agree with the plain rule exactly
     val c = corpusDF(40)
-    val lit64 = c.select(col("vec_id"), Ann.lshBucketLiteral(col("v"), 16, 6, 2).as("b"))
-      .as[(Long, Long)].collect().toMap
-    val bc64 = c.select(col("vec_id"), Ann.lshBucketBroadcast(col("v"), 16, 6, 2).as("b"))
-      .as[(Long, Long)].collect().toMap
-    bc64 shouldBe lit64
+    val got = c.select(col("vec_id"), col("v"), Ann.lshBucket(col("v"), 16, 6, 2).as("b"))
+      .collect()
+    got.length shouldBe 40
+    got.foreach { r =>
+      r.getLong(2) shouldBe refBucket(r.getSeq[Long](1).map(java.lang.Long.valueOf), 16, 6, 2)
+    }
   }
 
-  test("broadcast path matches the literal path on dirty rows (null / short / long vectors)") {
-    // the literal form null-propagates every projection for a null vector,
-    // a null element, or any length mismatch (zip_with pads with null;
-    // when(null >= 0) takes the otherwise-0 branch) — bucket 0, no task
-    // failure. The UDF form must degrade identically instead of throwing.
+  test("lshBucket matches the driver-side reference on dirty rows") {
+    // a null vector, a null element, or any length mismatch must land in
+    // bucket 0, not fail the task
     val dim = 16
     val rng = new scala.util.Random(7L)
     def vec(n: Int) = Seq.tabulate(n)(_ => java.lang.Long.valueOf(rng.nextInt(2000) - 1000L))
@@ -117,18 +126,16 @@ class AnnSpec extends AnyFunSuite with Matchers {
       4L -> vec(dim + 5),                                // too long
       5L -> (vec(dim - 1) :+ null.asInstanceOf[java.lang.Long])) // null element
     val df = rows.toDF("vec_id", "v")
-    val lit = df.select(col("vec_id"), Ann.lshBucketLiteral(col("v"), dim, 6, 0).as("b"))
+    val bc = df.select(col("vec_id"), Ann.lshBucket(col("v"), dim, 6, 0).as("b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bc = df.select(col("vec_id"), Ann.lshBucketBroadcast(col("v"), dim, 6, 0).as("b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    bc shouldBe lit
+    bc shouldBe rows.map { case (id, v) => id -> refBucket(v, dim, 6, 0) }.toMap
     Seq(2L, 3L, 4L, 5L).foreach(id => bc(id) shouldBe 0L)
   }
 
   test("dim-1024 bucketedTopK runs through the broadcast path with bounded plans") {
-    // dim x planes = 8192 entries per band — far past literalPlaneLimit, so
-    // this exercises the broadcast form end to end at embedding widths real
-    // models emit; the planted-direction construction keeps recall checkable
+    // dim x planes = 8192 entries per band: the broadcast plane table end
+    // to end at embedding widths real models emit; the planted-direction
+    // construction keeps recall checkable
     val dim = 1024
     val rows = {
       val rng = new scala.util.Random(11L)
@@ -194,8 +201,7 @@ class AnnSpec extends AnyFunSuite with Matchers {
   }
 
   test("lshBucket rejects planes outside [1,63]") {
-    // 1L << p wraps mod 64 at p >= 64: plane 64 would alias bit 0 and the
-    // literal/broadcast forms would silently diverge (carry vs OR)
+    // 1L << p wraps mod 64 at p >= 64: plane 64 would silently alias bit 0
     an[IllegalArgumentException] should be thrownBy Ann.lshBucket(col("v"), 16, 64)
     an[IllegalArgumentException] should be thrownBy Ann.lshBucket(col("v"), 16, 0)
     noException should be thrownBy Ann.lshBucket(col("v"), 16, 63)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Every native expression must JANINO-COMPILE, not just sit inside a
-  * WholeStageCodegen span. The round-4 SigBandsExpr defect (compute returned
+  * WholeStageCodegen span. The round-4 signature-kernel defect (compute returned
   * Any, so the generated Object->InternalRow assignment failed to compile)
   * was INVISIBLE to the existing `plan should include("*(")` assertions:
   * the compile failure happens at runtime and `spark.sql.codegen.fallback`
@@ -49,12 +49,10 @@ class CodegenCompileSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("sigBands + sigBandsFromKey compile under codegen-only, no fallback") {
+  test("sigBandsFromKey compiles under codegen-only, no fallback") {
     strictCodegen {
       val out = texts
-        .select(
-          functions.sigBands(functions.shingles($"s", 3), 16, 4, 3).as("a"),
-          functions.sigBandsFromKey($"s", 3, 16, 4, 3).as("b"))
+        .select(functions.sigBandsFromKey($"s", 3, 16, 4, 3).as("b"))
         .collect()
       out.length shouldBe 4
     }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Parity: the codegen'd column compositions must agree exactly with the
-  * pure kernels (which are themselves golden-tested against the reference).
+/** Parity: the codegen'd columns and native kernels must agree exactly with
+  * the pure kernels (themselves golden-tested against the reference) and,
+  * for signatures, with the test-scope scalar reference [[SigReference]].
   */
 class FunctionsSpec extends AnyFunSuite with Matchers {
   private lazy val spark = SparkTestSession.spark
@@ -54,33 +55,46 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("h60 yields 60-bit non-negative longs, stable") {
-    val out = fixtures.filter(_.nonEmpty).toDF("s")
-      .select(functions.h60($"s", 1) as "h1", functions.h60($"s", 17) as "h2")
-      .as[(Long, Long)].collect()
-    out.foreach { case (h1, h2) =>
+    // PortableHash.h60 == the oracle SQL's ('0x'||substr(md5(s), off, 15))::BIGINT,
+    // here as the same md5/substring/base-16 column composition
+    val inputs = fixtures.filter(_.nonEmpty)
+    val byCol = inputs.toDF("s")
+      .select($"s",
+        F.conv(F.substring(F.md5($"s"), 1, 15), 16, 10).cast("long") as "h1",
+        F.conv(F.substring(F.md5($"s"), 17, 15), 16, 10).cast("long") as "h2")
+      .as[(String, Long, Long)].collect()
+    byCol.length shouldBe inputs.length
+    byCol.foreach { case (s, h1, h2) =>
+      PortableHash.h60(s, 1) shouldBe h1
+      PortableHash.h60(s, 17) shouldBe h2
+      PortableHash.h60(s, 1) shouldBe PortableHash.h60(s, 1)
       h1 should be >= 0L; h1 should be < (1L << 60)
       h2 should be >= 0L; h2 should be < (1L << 60)
     }
   }
 
+  /** The signature kernel's (sig, simhash) fields over 3-grams of `keys`. */
+  private def sigs(keys: Seq[(String, String)], numHashes: Int, bands: Int, rows: Int) =
+    keys.toDF("id", "key")
+      .select($"id", functions.sigBandsFromKey($"key", 3, numHashes, bands, rows).as("ss"))
+      .select($"id", $"ss.sig", $"ss.simhash")
+      .as[(String, Seq[Long], Long)].collect().map { case (id, sig, sh) => id -> ((sig, sh)) }.toMap
+
   test("minhashSig: identical sets agree, disjoint sets almost surely differ") {
-    val df = Seq(
-      ("a", Seq("ab", "bc", "cd")),
-      ("b", Seq("cd", "ab", "bc", "ab")), // same SET as a (multiset differs)
-      ("c", Seq("xy", "yz", "zw"))
-    ).toDF("id", "grams")
-      .select($"id", functions.minhashSig($"grams", 16) as "sig")
-      .as[(String, Seq[Long])].collect().toMap
-    df("a") shouldBe df("b")
-    df("a") should not be df("c")
-    df("a").foreach { v => v should be >= 0L; v should be < functions.HashP }
+    // "-abcabc-" and "-abcabcabc-" have the same 3-gram SET (multisets
+    // differ); "-xyzw-" shares no 3-gram with either
+    val out = sigs(Seq("a" -> "abcabc", "b" -> "abcabcabc", "c" -> "xyzw"), 16, 4, 4)
+    out("a")._1 shouldBe out("b")._1
+    out("a")._1 should not be out("c")._1
+    out("a")._1.foreach { v => v should be >= 0L; v should be < functions.HashP }
   }
 
   test("bandKeys: equal signatures give equal band keys; band count right") {
-    val df = Seq(("a", Seq("ab", "bc", "cd")), ("b", Seq("ab", "bc", "cd")))
-      .toDF("id", "grams")
+    val df = Seq(("a", "alpha beta"), ("b", "ALPHA beta!")) // same normalized key
+      .toDF("id", "key")
       .select($"id",
-        functions.bandKeys(functions.minhashSig($"grams", 12), 4, 3) as "bands")
+        functions.bandKeys(functions.sigBandsFromKey($"key", 3, 12, 4, 3).getField("sig"), 4, 3)
+          as "bands")
       .as[(String, Seq[String])].collect().toMap
     df("a") shouldBe df("b")
     df("a").length shouldBe 4
@@ -88,125 +102,74 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("simhash60: near-identical gram multisets land at small hamming distance") {
-    val base = Gram.grams("the quick brown fox jumps over the lazy dog", 3)
-    val near = Gram.grams("the quick brown fox jumps over the lazy dot", 3)
-    val far = Gram.grams("completely unrelated text with other grams entirely", 3)
-    val out = Seq(("base", base), ("near", near), ("far", far))
-      .toDF("id", "grams")
-      .select($"id", functions.simhash60($"grams") as "sh")
-      .as[(String, Long)].collect().toMap
+    val out = sigs(Seq(
+      "base" -> "the quick brown fox jumps over the lazy dog",
+      "near" -> "the quick brown fox jumps over the lazy dot",
+      "far" -> "completely unrelated text with other grams entirely"), 1, 1, 1)
+      .map { case (id, (_, sh)) => id -> sh }
     out.values.foreach { v => v should be >= 0L; v should be < (1L << 60) }
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     ham(out("base"), out("near")) should be < ham(out("base"), out("far"))
     ham(out("base"), out("near")) should be <= 12
   }
 
-  test("PortableHash.sigAndSimhash == column expressions (minhashSig/simhash60)") {
-    // inputs with at least one 3-gram (empty-normalized rows never get
-    // signatures: IndexBuild filters them out before the LSH passes)
-    val inputs = fixtures.filter(s => Gram.grams(s, 3).nonEmpty)
-    val byExpr = inputs.toDF("s")
-      .select($"s", functions.minhashSig(functions.shingles($"s", 3), 16) as "sig",
-        functions.simhash60(functions.shingles($"s", 3)) as "sh")
-      .collect()
-      .map(r => r.getString(0) -> ((r.getSeq[Long](1), r.getLong(2))))
-      .toMap
-    inputs.foreach { s =>
-      val grams = Gram.grams(s, 3)
-      val (sig, sim) = PortableHash.sigAndSimhash(grams, 16)
-      byExpr(s)._1 shouldBe sig.toSeq
-      byExpr(s)._2 shouldBe sim
-    }
-  }
-
   test("estJaccard tracks true jaccard within sampling error") {
     val a = (1 to 60).map(i => s"g$i")
     val b = (31 to 90).map(i => s"g$i") // true J = 30/90 = 1/3
-    val (sa, _) = PortableHash.sigAndSimhash(a, 128)
-    val (sb, _) = PortableHash.sigAndSimhash(b, 128)
+    val (sa, _) = SigReference.sigAndSimhash(a, 128)
+    val (sb, _) = SigReference.sigAndSimhash(b, 128)
     val est = sa.zip(sb).count { case (x, y) => x == y } / 128.0
     est shouldBe (1.0 / 3.0) +- 0.15
-    val out = Seq((a, b)).toDF("a", "b")
-      .select(functions.estJaccard(
-        functions.minhashSig($"a", 128), functions.minhashSig($"b", 128)) as "j")
+    val out = Seq((sa.toSeq, sb.toSeq)).toDF("a", "b")
+      .select(functions.estJaccard($"a", $"b") as "j")
       .as[Double].head()
     out shouldBe est +- 1e-12
   }
 
-  test("sigBands (native expr) == PortableHash kernels, incl. multibyte and repeated grams") {
-    val inputs: Seq[Seq[String]] = Seq(
-      Seq("abc", "bcd", "abc", "cde"), // repeats: simhash weights the multiset
-      Seq("hél", "wör", "hél"), // 2-byte UTF-8 (bytes-vs-String md5 parity)
-      Seq("日本語", "語日本"), // 3-byte UTF-8
-      Seq("x"))
-    val df = inputs.zipWithIndex.map { case (g, i) => (i, g) }.toDF("i", "g").repartition(2)
-    val q = df.select($"i", functions.sigBands($"g", 16, 4, 3).as("ss"))
-      .select($"i", $"ss.sig", $"ss.simhash", $"ss.band_hashes")
-    q.collect() // finalize AQE on THIS Dataset's QueryExecution
-    val out = q.as[(Int, Seq[Long], Long, Seq[Long])].collect().sortBy(_._1)
-    out.zip(inputs).foreach { case ((_, sig, sim, bh), grams) =>
-      val (eSig, eSim) = PortableHash.sigAndSimhash(grams, 16)
-      sig shouldBe eSig.toSeq
-      sim shouldBe eSim
-      bh shouldBe PortableHash.bandHashes(eSig, 4, 3).toSeq
-    }
-    // the kernel must stay inside whole-stage codegen
-    q.queryExecution.executedPlan.toString should include("*(")
-  }
-
   test("sigBandsFromKey (fused kernel) == sigBands(shingles(key)) on every key shape") {
-    val keys = Seq(
+    // sigBands = the test-scope scalar reference over the shingles column
+    val keys: Seq[Option[String]] = Seq(
       "alpha beta gamma", // plain ascii
       "Alpha, BETA gamma!", // normalization (case, punct drop, comma kept)
       "aaaaaaaa", // heavy repeats (distinct-set vs multiset split)
+      "abc abc abd abc", // repeated grams: simhash weights the multiset
       "déjà vu naïve café", // 2-byte UTF-8 (per-window substring path)
+      "hél wör hél", // 2-byte UTF-8 repeats (bytes-vs-String md5 parity)
       "中文字 mixed 字符", // 3-byte UTF-8
-      "ab", // exactly one gram at n=3 after '-ab-' enclosure? (len 4 >= 3)
+      "ab", // exactly one gram at n=3 after '-ab-' enclosure (len 4 >= 3)
       "", // empty -> no grams -> NULL
       "!!!", // normalizes to empty -> '-'||''||'-' is len 2 < 3 -> NULL
       "x😀y", // astral NON-letter: dropped whole by normalization
       "a𝐀b 𠀡c" // astral LETTERS kept: windows are code points, never split
-    )
+    ).map(Some(_)) :+ None // NULL key stays NULL
     val df = keys.zipWithIndex.map { case (k, i) => (i, k) }.toDF("i", "key").repartition(2)
-    val fused = df.select($"i",
+    val fused = df.select($"i", functions.shingles($"key", 3).as("g"),
       functions.sigBandsFromKey($"key", 3, 16, 4, 3).as("ss"))
     fused.collect() // finalize AQE before inspecting the plan
-    val viaGrams = df.select($"i", functions.shingles($"key", 3).as("g"))
-      .filter(org.apache.spark.sql.functions.size($"g") > 0)
-      .select($"i", functions.sigBands($"g", 16, 4, 3).as("ss"))
-    def rows(q: org.apache.spark.sql.DataFrame) = q
-      .filter($"ss".isNotNull)
-      .select($"i", $"ss.sig", $"ss.simhash", $"ss.band_hashes")
-      .as[(Int, Seq[Long], Long, Seq[Long])].collect().sortBy(_._1).toSeq
-    val f = rows(fused)
-    f shouldBe rows(viaGrams)
-    // the two gram-less keys ("" and "!!!") are NULL in fused and filtered
-    // by size() in the reference composition — same surviving id set
-    f.map(_._1) shouldBe keys.indices.filterNot(i => keys(i) == "" || keys(i) == "!!!")
+    val out = fused.select($"i", $"g", $"ss.sig", $"ss.simhash", $"ss.band_hashes")
+      .as[(Int, Option[Seq[String]], Option[Seq[Long]], Option[Long], Option[Seq[Long]])]
+      .collect().sortBy(_._1)
+    out.length shouldBe keys.length
+    def sigBands(grams: Seq[String]) = {
+      val (sig, sim) = SigReference.sigAndSimhash(grams, 16)
+      (sig.toSeq, sim, PortableHash.bandHashes(sig, 4, 3).toSeq)
+    }
+    out.foreach { case (i, g, sig, sim, bh) =>
+      withClue(s"key ${keys(i)}: ") {
+        g.map(_.toSeq) shouldBe keys(i).map(Gram.grams(_, 3))
+        g.filter(_.nonEmpty) match {
+          case Some(grams) =>
+            (sig.get, sim.get, bh.get) shouldBe sigBands(grams)
+          case None => // gram-less or NULL key -> NULL struct
+            sig shouldBe None; sim shouldBe None; bh shouldBe None
+        }
+      }
+    }
+    // the three gram-less keys ("", "!!!", NULL) are exactly the NULL rows
+    out.filter(_._3.isEmpty).map(_._1).toSeq shouldBe
+      keys.indices.filter(i => keys(i).forall(Gram.grams(_, 3).isEmpty))
     // and the fused kernel stays inside whole-stage codegen
     fused.queryExecution.executedPlan.toString should include("*(")
-  }
-
-  test("gram-less rows: sigBands is NULL, minhash folds to the MaxValue identity") {
-    // a constant all-MaxValue signature on every empty row would put all
-    // of them in ONE LSH bucket per band (quadratic); the SQL surface
-    // reaches sigBands without the index build's size(grams) > 0 guard
-    val df = Seq(
-      (0, Option.empty[Seq[String]]), // NULL input stays NULL, not identity
-      (1, Some(Seq.empty[String])),
-      (2, Some(Seq("-ab-", "ab-x")))).toDF("i", "g")
-      .repartition(2)
-    val out = df.select($"i",
-      functions.sigBands($"g", 8, 4, 2).as("ss"),
-      functions.minhashFromHashes(functions.gramHashPairs($"g"), 8).as("mh"))
-      .collect().sortBy(_.getInt(0))
-    out(0).isNullAt(1) shouldBe true
-    out(0).isNullAt(2) shouldBe true
-    out(1).isNullAt(1) shouldBe true
-    // == PortableHash.SigState's fold identity for zero grams
-    out(1).getSeq[Long](2) shouldBe Seq.fill(8)(Long.MaxValue)
-    out(2).isNullAt(1) shouldBe false
-    out(2).getSeq[Long](2).exists(_ != Long.MaxValue) shouldBe true
   }
 
   test("estJaccard counts a null component as unequal (zip_with null parity)") {

@@ -20,10 +20,10 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
     // 300-member bucket is above cap=100 -> salted regime; 40-member bucket
     // stays direct; the union must equal the unsalted all-pairs ground truth
     val keyed = bandsDF(Map("hot" -> 300, "small" -> 40, "single" -> 1))
-    val salted = Candidates
+    val salted = CandidateRefs
       .bucketSelfPairs(keyed, cap = 100, saltChunk = 32, maxSalted = 4096)
       .as[(String, String)].collect().toSet
-    val direct = Candidates
+    val direct = CandidateRefs
       .bucketSelfPairs(keyed, cap = 1000000, saltChunk = 32, maxSalted = 4096)
       .as[(String, String)].collect().toSet
     salted.size shouldBe (300 * 299 / 2 + 40 * 39 / 2)
@@ -32,7 +32,7 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
 
   test("buckets beyond maxSaltedBucket switch to the star regime; others unaffected") {
     val keyed = bandsDF(Map("flood" -> 600, "ok" -> 5))
-    val pairs = Candidates
+    val pairs = CandidateRefs
       .bucketSelfPairs(keyed, cap = 100, saltChunk = 32, maxSalted = 500)
       .as[(String, String)].collect()
     val (floodPairs, okPairs) = pairs.partition(_._1.startsWith("flood"))
@@ -46,7 +46,7 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
 
   test("a pair never duplicates across the salted join (a<b once per bucket)") {
     val keyed = bandsDF(Map("hot" -> 150))
-    val pairs = Candidates
+    val pairs = CandidateRefs
       .bucketSelfPairs(keyed, cap = 100, saltChunk = 16, maxSalted = 4096)
       .as[(String, String)].collect()
     pairs.length shouldBe pairs.toSet.size
@@ -63,9 +63,9 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
       .fusedPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
       .as[(String, String)].collect().toSet
     val separate =
-      Candidates.lshPairs(idx.bands, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
+      CandidateRefs.lshPairs(idx.bands, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
         .as[(String, String)].collect().toSet ++
-        Candidates.simhashPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
+        CandidateRefs.simhashPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
           .as[(String, String)].collect().toSet
     fused shouldBe separate
     fused should not be empty // planted dups guarantee collisions
@@ -78,7 +78,7 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
     // 3000 synthetic clips with planted dups; no bucket approaches the
     // caps, so both paths run their direct regimes and the pair SETS must
     // be exactly equal — the incremental union-over-batches coverage
-    // argument (Candidates.incrementalPairs scaladoc) as a concrete check
+    // argument (Candidates.incrementalPairsFromKeys scaladoc) as a concrete check
     val clips = graft.audio.ClipSynth.table(spark, 3000, includeAudio = false)
     val idx = graft.stage.IndexBuild(clips, "clip_id", "transcript", conf)
     val sigs = idx.sigs.cache()
@@ -87,9 +87,9 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
     val firstBatch = sigs.filter(fAbs(xxhash64(col("item_id"))) % 3 < 2).cache()
     val secondNew = sigs.filter(fAbs(xxhash64(col("item_id"))) % 3 === 2)
     val incremental =
-      Candidates.incrementalPairs(firstBatch, firstBatch, 3, conf.maxSaltedBucket)
+      CandidateRefs.incrementalPairs(firstBatch, firstBatch, 3, conf.maxSaltedBucket)
         .as[(String, String)].collect().toSet ++
-        Candidates.incrementalPairs(secondNew, sigs, 3, conf.maxSaltedBucket)
+        CandidateRefs.incrementalPairs(secondNew, sigs, 3, conf.maxSaltedBucket)
           .as[(String, String)].collect().toSet
     val batch = Candidates
       .fusedPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
@@ -200,7 +200,7 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
       (f"r$i%04d", base | ((i.toLong + 7) << 20)) // far apart in high bits
     } :+ ("pairA0", base | (1L << 50)) :+ ("pairB0", base | (1L << 50) | (1L << 58)))
       .toDF("item_id", "simhash")
-    val got = Candidates
+    val got = CandidateRefs
       .simhashPairs(sigs, maxHamming = 3, maxBandBucket = 50, saltChunk = 16, maxSaltedBucket = 4096)
       .as[(String, String)].collect().toSet
     got should contain(("pairA0", "pairB0"))

@@ -116,8 +116,8 @@ class ClusterSpec extends AnyFunSuite with Matchers {
       "p" -> "p", "q" -> "p", "r" -> "p",
       "x" -> "x", "y" -> "x", "lone" -> "lone")
     for (gate <- Seq(2000000L, 0L)) {
-      val (labels, iters) =
-        Cluster.connectedComponentsWithStats(vertices, edges, maxIter = 25, maxBroadcastEndpoints = gate)
+      val (labels, iters, _) =
+        Cluster.connectedComponentsReleasable(vertices, edges, maxIter = 25, maxBroadcastEndpoints = gate)
       withClue(s"gate=$gate: ") {
         labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap shouldBe expect
         iters should be > 0 // the path/triangle residual still iterates
@@ -150,8 +150,8 @@ class ClusterSpec extends AnyFunSuite with Matchers {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("p", "q"), ("q", "r"), ("r", "p"))
       .toDF("a_id", "b_id")
     val vertices = Seq("a", "b", "c", "d", "p", "q", "r", "lone").toDF("id")
-    val (labels, iters) =
-      Cluster.connectedComponentsWithStats(vertices, edges, maxIter = 25, maxBroadcastEndpoints = 0L)
+    val (labels, iters, _) =
+      Cluster.connectedComponentsReleasable(vertices, edges, maxIter = 25, maxBroadcastEndpoints = 0L)
     val byId = labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     byId shouldBe Map(
       "a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",

@@ -194,7 +194,7 @@ class StreamDedupSpec extends AnyFunSuite with Matchers {
     val edges = StreamDedup.edges(spark, stateDir).select("a_id", "b_id")
       .unionByName(substr.select("a_id", "b_id"))
     val verts = spark.read.parquet(s"$stateDir/members").select(col("clip_id").as("id"))
-    val labels = graft.stage.Cluster.connectedComponents(verts, edges)
+    val labels = graft.stage.Cluster.connectedComponentsWithStats(verts, edges)._1
       .as[(String, String)].collect().toMap
     val planted = graft.audio.ClipSynth.plantedPairs(n)
     planted.size should be > 500
