@@ -2,9 +2,10 @@ package graft.api
 
 import graft.conf.FuzzyConf
 import graft.io.TableIO
-import graft.stage.{Candidates, Cluster, FindStage, IndexBuild, IndexTables, SmallInput}
+import graft.stage.{Candidates, Cluster, FindStage, IndexBuild, IndexTables, Scratch, SmallInput}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The engine facade — plays the role of the reference's two API layers
   * (`Data.FuzzySet.Simple` pure API + `Data.FuzzySet` monadic API,
@@ -64,12 +65,27 @@ final case class FuzzyPipeline(
       // but blocks persist on first consuming job — so stages a query
       // never touches (e.g. sigs/members for a plain findMin) are never
       // computed, and no standalone count() job is paid per stage (round 1
-      // ran one eager job per stage even when unused).
+      // ran one eager job per stage even when unused). Untracked: the
+      // blocks are the stage table itself and live with the pipeline.
       case None =>
         if (mapSideStages(name)) df
-        else df.localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        else Scratch.noop.checkpoint(df, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     }
+
+  /** Block scope of a stage whose result reads its own checkpoints (edge
+    * branches, CC survivors), taken into `held`. In checkpoint-dir mode the
+    * stage's parquet write is their last consumer, so they are released
+    * once `body` returns; in local mode the result is a plan OVER them and
+    * they live as long as the pipeline. A failed stage frees them.
+    */
+  private def holding(body: Scratch => DataFrame): DataFrame = {
+    val held = new Scratch
+    val out =
+      try body(held)
+      catch { case t: Throwable => held.release(); throw t }
+    if (checkpointDir.isDefined) held.release()
+    out
+  }
 
   /** The six index tables (SURVEY.md §1.2); each stage materializes through
     * `ckpt` and downstream stages consume the MATERIALIZED table (see
@@ -196,13 +212,6 @@ final case class FuzzyPipeline(
     } finally pool.shutdown()
   }
 
-  /** SERIALIZED storage for branch materializations — same GC argument as
-    * `ckpt`'s scaladoc: these blocks outlive the whole pipeline and old-gen
-    * object COUNT is what full collections trace.
-    */
-  private def matSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-
   /** Candidate pairs from all generation passes (LSH + SimHash), distinct.
     * One FUSED bucket self-join over the combined band + chunk key space
     * (Candidates.fusedPairs): the two passes were separate chains in round
@@ -247,9 +256,9 @@ final case class FuzzyPipeline(
   private val candLock = new Object
   // intermediate-checkpoint collector shared by candidate generation and
   // the edge branches; released in edgesMemo once the branch tables are
-  // materialized (their write/matSer is the scratch's last consumer).
+  // materialized (their checkpoints are the scratch's last consumer).
   // private[api] so the spec can assert the release actually happened
-  private[api] val scratch = new graft.stage.Scratch
+  private[api] val scratch = new Scratch
   // private[api] so the resume spec can assert the fuzzy branch (and with
   // it candidate generation) never ran on a fresh-checkpoint resume
   @volatile private[api] var candidatesCache: DataFrame = _
@@ -274,13 +283,13 @@ final case class FuzzyPipeline(
     * every measured scale. See BASELINE.md "Scale-boundary finding".
     */
   def dedupEdges(): DataFrame = edgesMemo
-  private lazy val edgesMemo: DataFrame = {
+  private lazy val edgesMemo: DataFrame = holding { held =>
     // ALL eager work lives inside this thunk: `ckpt` passes its compute
     // by-name down to TableIO.checkpoint, which consults the sidecar
     // BEFORE forcing it — so a checkpoint-dir resume re-reads the stored
-    // edges table without re-running the branches at all. Evaluating the
-    // branches before the ckpt call (rounds 1-3) recomputed candidate
-    // generation + verification on every resume.
+    // edges table without re-running the branches at all (and `held` stays
+    // empty). Evaluating the branches before the ckpt call (rounds 1-3)
+    // recomputed candidate generation + verification on every resume.
     def computeUnion(): DataFrame = {
       // force the sibling lazy val ON THIS THREAD before spawning
       // branches: a Scala lazy val initializer holds the instance
@@ -300,16 +309,18 @@ final case class FuzzyPipeline(
       // verdict item 1: it used to run serially before the branches,
       // adding its whole stage chain to the critical path while
       // exact/substr cores sat idle)
-      val branches = concurrently(
-        () => matSer(FindStage.verifyPairs(candidatePairs(), idx, conf.minScore, scratch)),
-        () => matSer(Candidates.exactEdges(idx.members)),
-        () => matSer(Candidates.substringPairs(
+      // SERIALIZED branch blocks — same GC argument as `ckpt`'s: they can
+      // outlive the pipeline and old-gen object COUNT is what full GCs trace
+      def materialize(df: DataFrame): DataFrame =
+        held.checkpoint(df, eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+      val Seq(fuzzy, exact, substr) = concurrently(
+        () => materialize(FindStage.verifyPairs(candidatePairs(), idx, conf.minScore, scratch)),
+        () => materialize(Candidates.exactEdges(idx.members)),
+        () => materialize(Candidates.substringPairs(
           idx.items, conf.substringPrefixLen, conf.substringMinRatio, conf.maxBandBucket,
           scratch)))
-      val Seq(fuzzy, exact, substr) = branches
-      lastEdgeBranches = branches
-      // every branch is eagerly block-materialized (matSer) and candidate
-      // generation was forced inside the fuzzy branch (verifyPairs counts
+      // every branch is materialized and candidate generation was
+      // forced inside the fuzzy branch (verifyPairs counts
       // its pair side), so the stages' intermediate checkpoints — bucket
       // directories, exploded window hashes, gated pairs, pruned postings
       // — have served their one materialization and can be freed now,
@@ -318,28 +329,13 @@ final case class FuzzyPipeline(
       exact.unionByName(fuzzy).unionByName(substr)
     }
     checkpointDir match {
-      case Some(_) =>
-        // the parquet write inside ckpt is the branch blocks' LAST
-        // consumer (every downstream read goes through the written
-        // table), so free them once it returns — otherwise the full edge
-        // set stays pinned in block storage for the session. On a sidecar
-        // resume the compute thunk never runs and there is nothing to
-        // free.
-        val out = ckpt("edges")(computeUnion())
-        lastEdgeBranches.foreach(b =>
-          org.apache.spark.sql.GraftColumnBridge.checkpointedRdd(b)
-            .foreach(_.unpersist(blocking = false)))
-        lastEdgeBranches = Nil
-        out
+      case Some(_) => ckpt("edges")(computeUnion())
       // the branches are already materialized blocks; re-checkpointing
       // their union would copy every edge row a second time for a plan
       // that is nothing but three block scans
       case None => computeUnion()
     }
   }
-  // set only while edgesMemo initializes (single-threaded: the lazy-val
-  // initializer), read right after — not part of the public state
-  private var lastEdgeBranches: Seq[DataFrame] = Nil
 
   /** Verified duplicate edges with FULL reference fidelity — every item
     * probes the whole index through the inverted-index join exactly as the
@@ -377,31 +373,28 @@ final case class FuzzyPipeline(
 
   /** Shared CC driver for both edge sets. The CC loop's surviving blocks
     * (final label generation + contracted-pair labels — endpoint-sized,
-    * real memory at 10^12 rows) are released once the parquet checkpoint
-    * write has consumed them, same pattern as the edge branches above. In
-    * local (no-checkpoint-dir) mode the result is only LAZILY checkpointed
-    * — the label blocks are still its lineage until the first consuming
-    * job — so there is nothing safe to free here and the blocks live for
-    * the pipeline instance, bounded by its corpus.
+    * real memory at 10^12 rows) live in the same [[holding]] scope as the
+    * edge branches: released once the parquet checkpoint write has
+    * consumed them; in local (no-checkpoint-dir) mode the result is only
+    * LAZILY checkpointed — the label blocks are still its lineage until
+    * the first consuming job — so they live for the pipeline instance.
     */
-  private def clustersFrom(edgeSet: () => DataFrame, stage: String): DataFrame = {
-    // eager CC work stays inside the by-name ckpt block: on a
-    // checkpoint-dir resume the stored labels are re-read without
-    // touching the edge stages or re-iterating CC (and then there are no
-    // loop blocks to free)
-    var release: () => Unit = () => ()
-    val out = ckpt(stage) {
-      val edges = edgeSet().select("a_id", "b_id")
-      val vertices = index.members.select(col("clip_id").as("id"))
-      // members carries one row per source row (IndexBuild derives it from
-      // the keyed input without grouping away ids), so the vertex set is
-      // distinct by construction — CC may skip its re-proving exchange
-      val (labeled, _, rel) = Cluster.connectedComponentsReleasable(
-        vertices, edges, verticesDistinct = true)
-      release = rel
-      labeled.select(col("id").as("clip_id"), col("component"))
+  private def clustersFrom(edgeSet: () => DataFrame, stage: String): DataFrame =
+    holding { held =>
+      // eager CC work stays inside the by-name ckpt block: on a
+      // checkpoint-dir resume the stored labels are re-read without
+      // touching the edge stages or re-iterating CC (and then there are no
+      // loop blocks to free)
+      ckpt(stage) {
+        val edges = edgeSet().select("a_id", "b_id")
+        val vertices = index.members.select(col("clip_id").as("id"))
+        // members carries one row per source row (IndexBuild derives it
+        // from the keyed input without grouping away ids), so the vertex
+        // set is distinct by construction — CC may skip its re-proving
+        // exchange
+        val (labeled, _) = Cluster.connectedComponentsReleasable(
+          vertices, edges, held, verticesDistinct = true)
+        labeled.select(col("id").as("clip_id"), col("component"))
+      }
     }
-    if (checkpointDir.isDefined) release()
-    out
-  }
 }

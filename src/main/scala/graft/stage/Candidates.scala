@@ -2,6 +2,7 @@ package graft.stage
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Candidate-pair generation — the scale replacement for the reference's
   * all-items inverted-index walk (Internal.hs:67-74), which at 10^12 rows
@@ -78,11 +79,10 @@ object Candidates {
       maxSalted: Int,
       maxHamming: Int,
       scratch: Scratch = Scratch.noop): DataFrame = {
-    val sizes = scratch.track(keyed
+    val sizes = scratch.checkpoint(keyed
       .groupBy("bkey", "ktype")
       .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > 1)
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+      .filter(col("bucket_n") > 1), eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     // six downstream branches (small a/b, hot A/B, flood x2) consume the
     // keyed-with-size table. When the non-singleton bucket directory is
     // small (the common case — most band values are unique), BROADCAST it
@@ -107,11 +107,10 @@ object Candidates {
         // re-running the full sigs-scan + key explode + broadcast join
         // (guide §1.2 "don't recompute"; interleaved A/B at 1.6M clips:
         // 13.5-17.1 s -> 9.8-12.1 s for the candidates stage, same pairs)
-        scratch.track(joined.localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        scratch.checkpoint(joined, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
       } else
-        scratch.track(keyed.join(sizes, Seq("bkey", "ktype"))
-          .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        scratch.checkpoint(keyed.join(sizes, Seq("bkey", "ktype")),
+          eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     val keep = (col("ktype") =!= 1) ||
       bit_count(col("a_sh").bitwiseXOR(col("b_sh"))) <= maxHamming
 
@@ -185,12 +184,6 @@ object Candidates {
     * ~ 128 MB broadcast).
     */
   private val bucketDirBroadcastLimit = 4000000L
-
-  /** Above this many verified-candidate substring pairs the pair side is no
-    * longer broadcast into the longK key joins (same bound and rationale as
-    * FindStage's broadcastPairLimit).
-    */
-  private val substringPairBroadcastLimit = 1000000L
 
   /** Exact substring-containment pairs — the distributed realization of
     * the north rule's suffix-array pass (SURVEY §7.4). A key `a` is a
@@ -284,8 +277,7 @@ object Candidates {
         // sized, tiny next to the corpus — so the blocks are cheap by
         // construction in this (broadcast) regime.
         if (lazyPlan) hits
-        else scratch.track(hits.localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        else scratch.checkpoint(hits, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
       } else {
         // ONLY (id, hash) travels through the explode — the key BODY and
         // even the L-char prefix string are hashed away before the shuffle
@@ -293,10 +285,10 @@ object Candidates {
         // contains() verification below rejects it). Materialized once:
         // the hot-prefix aggregation and the candidate join consume it on
         // different keys, so exchange reuse cannot share the explode.
-        val containers = scratch.track(longK
+        val containers = scratch.checkpoint(longK
           .select(col("item_id").as("b_id"),
-            explode(prefixHashes(prefixLen)(col("key"))).as("pfx"))
-          .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+            explode(prefixHashes(prefixLen)(col("key"))).as("pfx")),
+          eager = false, StorageLevel.MEMORY_AND_DISK_SER)
         containers.join(contained.select("pfx").distinct(), Seq("pfx"), "left_semi")
       }
 
@@ -327,9 +319,8 @@ object Candidates {
     val longPairs = {
       val candidatePairs =
         if (lazyPlan) candidatePairsRaw
-        else scratch.track(candidatePairsRaw.localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-      val candSmall = !lazyPlan && candidatePairs.count() <= substringPairBroadcastLimit
+        else scratch.checkpoint(candidatePairsRaw, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+      val candSmall = !lazyPlan && candidatePairs.count() <= FindStage.broadcastPairLimit
       val candSide =
         if (lazyPlan) candidatePairs
         else if (candSmall) candidatePairs.hint("broadcast")
@@ -365,14 +356,14 @@ object Candidates {
       .filter(col("klen") >= 1 && col("klen") < prefixLen)
       .select(col("item_id").as("a_id"), xxhash64(col("key")).as("subh"),
         col("key").as("a_key"), col("klen").as("a_len"))
-    val shortWindowed = scratch.track(keyed
+    // same two-consumers-on-different-keys shape as the long regime's
+    // `containers`: the okSub aggregation and the candidate join would
+    // otherwise each re-run the O(L^2/minRatio)-per-row window explode
+    val shortWindowed = scratch.checkpoint(keyed
       .filter(col("klen") >= 2 && col("klen") <= maxShortContainerLen)
       .select(col("item_id").as("b_id"), col("key").as("b_key"), col("klen").as("b_len"),
-        explode(shortWindowHashes(prefixLen)(col("key"))).as("subh"))
-      // same two-consumers-on-different-keys shape as the long regime's
-      // `containers`: the okSub aggregation and the candidate join would
-      // otherwise each re-run the O(L^2/minRatio)-per-row window explode
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        explode(shortWindowHashes(prefixLen)(col("key"))).as("subh")),
+      eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     // same hot-bucket fanout cap as the long regime, per substring hash
     val okSub = shortWindowed
       .groupBy("subh")
@@ -567,22 +558,21 @@ object Candidates {
       maxBucket: Int,
       scratch: Scratch = Scratch.noop): DataFrame = {
     val touched = newKeys.select("bkey", "ktype").distinct()
-    val pruned = scratch.track(allKeys
-      .join(touched, Seq("bkey", "ktype"), "left_semi")
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    val pruned = scratch.checkpoint(allKeys.join(touched, Seq("bkey", "ktype"), "left_semi"),
+      eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     // bucket directory MATERIALIZED (scratch-released like pruned) so one
     // tiny stats job can read the largest bucket: when no touched bucket
     // exceeds maxBucket — the common case outside flood regimes — the
     // star/patch branches and even the probe-side size join are provably
     // no-ops, and skipping them removes a third of the per-micro-batch AQE
     // stage chain (the streaming path runs this once per batch)
-    val sizes = scratch.track(pruned
+    val sizes = scratch.checkpoint(pruned
       .groupBy("bkey", "ktype")
       .agg(
         count(lit(1)).as("bucket_n"),
         min("item_id").as("min_id"),
-        min_by(col("sh"), col("item_id")).as("min_sh"))
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        min_by(col("sh"), col("item_id")).as("min_sh")),
+      eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     val maxBucketN = sizes.agg(coalesce(max("bucket_n"), lit(0L))).head().getLong(0)
     // hamming gate (symmetric) runs inside each branch, before the distinct
     def keep(aSh: org.apache.spark.sql.Column, bSh: org.apache.spark.sql.Column) =

@@ -1,6 +1,6 @@
 package graft.stage
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -18,15 +18,11 @@ import org.apache.spark.storage.StorageLevel
   * the previous labels several times, so without truncation the tree grows
   * ~4^iterations and Catalyst analysis itself becomes the bottleneck).
   * Round-1 leak fix: the SUPERSEDED generation's block-backed RDD is
-  * unpersisted as soon as the next generation is materialized (Dataset
-  * .unpersist can't reach checkpoint blocks — see
-  * GraftColumnBridge.checkpointedRdd), so a run holds at most two
-  * generations of label blocks instead of one per iteration.
+  * freed ([[Scratch.free]]) as soon as the next generation is
+  * materialized, so a run holds at most two generations of label blocks
+  * instead of one per iteration.
   */
 object Cluster {
-
-  private def freeCheckpoint(df: DataFrame): Unit =
-    GraftColumnBridge.checkpointedRdd(df).foreach(_.unpersist(blocking = false))
 
   /** edges: (a_id, b_id) undirected; vertices: one column `id` (superset of
     * edge endpoints). Returns ((id, component), iterations) where component
@@ -42,27 +38,23 @@ object Cluster {
     * shape in web dedup) are contracted to min(src,dst) before the loop,
     * so only the residual multi-edge subgraph iterates at all.
     *
-    * NOTE: this form discards the release hook, so the loop's surviving
-    * checkpoint blocks — the final label generation AND the
-    * contracted-pair labels, both endpoint-sized — stay pinned until the
-    * SparkContext ends. It is a test/validation convenience; production
-    * callers (FuzzyPipeline, StreamDedup) use
-    * [[connectedComponentsReleasable]] and invoke the hook after durably
-    * materializing the result.
+    * NOTE: this form runs under [[Scratch.noop]], so the loop's surviving
+    * blocks stay pinned until the SparkContext ends — a test/validation
+    * convenience. Production callers (FuzzyPipeline, StreamDedup) pass
+    * their own scratch to [[connectedComponentsReleasable]].
     */
-  def connectedComponentsWithStats(vertices: DataFrame, edges: DataFrame): (DataFrame, Int) = {
-    val (out, iter, _) = connectedComponentsReleasable(vertices, edges)
-    (out, iter)
-  }
+  def connectedComponentsWithStats(vertices: DataFrame, edges: DataFrame): (DataFrame, Int) =
+    connectedComponentsReleasable(vertices, edges, Scratch.noop)
 
-  /** [[connectedComponentsWithStats]] plus a release hook that unpersists
-    * the loop's surviving checkpoint blocks (the final label generation +
-    * the contracted-pair labels — both endpoint-sized, which at
-    * 10^12-row scale is real executor memory). The returned DataFrame is a
-    * plan OVER those blocks, so the hook must only run after the caller
-    * has durably materialized the result (e.g. a parquet checkpoint
-    * write); freeing earlier loses the labels — a locally checkpointed
-    * RDD's lineage is truncated and cannot recompute.
+  /** [[connectedComponentsWithStats]] with the loop's surviving checkpoint
+    * blocks (the final label generation + the contracted-pair labels —
+    * both endpoint-sized, which at 10^12-row scale is real executor
+    * memory) tracked in `scratch`; the loop's superseded tables are freed
+    * as it goes. The returned DataFrame is a plan OVER the surviving
+    * blocks, so `scratch` must only be released after the caller has
+    * durably materialized the result (e.g. a parquet checkpoint write);
+    * freeing earlier loses the labels — a locally checkpointed RDD's
+    * lineage is truncated and cannot recompute.
     *
     * `maxBroadcastEndpoints` gates the per-iteration broadcast label joins
     * (ClusterSpec drives it to 0 to pin the shuffle-join regime production
@@ -79,9 +71,10 @@ object Cluster {
   private[graft] def connectedComponentsReleasable(
       vertices: DataFrame,
       edges: DataFrame,
+      scratch: Scratch,
       maxIter: Int = 25,
       maxBroadcastEndpoints: Long = 2000000L,
-      verticesDistinct: Boolean = false): (DataFrame, Int, () => Unit) = {
+      verticesDistinct: Boolean = false): (DataFrame, Int) = {
     // hash-partition the STATIC edge table by the join key once, before
     // its checkpoint: Dataset.localCheckpoint preserves outputPartitioning
     // in the LogicalRDD, so every iteration's neighbor join reuses it and
@@ -94,12 +87,11 @@ object Cluster {
     // `.distinct().repartition(src)` paid a (src, dst) exchange AND the src
     // exchange back to back (guide §2.4: share one exchange between
     // operations keyed compatibly)
-    val sym = edges
+    val sym = scratch.checkpoint(edges
       .select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
       .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint()
+      .dropDuplicates("src", "dst"), eager = true)
 
     // degree per endpoint groups on sym's preserved src partitioning — no
     // exchange; its count is the distinct-endpoint count, which decides
@@ -110,9 +102,8 @@ object Cluster {
     // job (one fewer job in the serial CC preamble — same pattern as the
     // loop's convergence metric below)
     val degObs = org.apache.spark.sql.Observation("cc_deg_n")
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-      .observe(degObs, count(lit(1)).as("n"))
-      .localCheckpoint()
+    val deg = scratch.checkpoint(sym.groupBy("src").agg(count(lit(1)).as("deg"))
+      .observe(degObs, count(lit(1)).as("n")), eager = true)
     val nEndpoints = degObs.get("n").asInstanceOf[Long]
 
     // label tables stay endpoint-sized for the whole loop; when that is
@@ -143,33 +134,30 @@ object Cluster {
     // rebuild both broadcast sides) per checkpoint job. Under the gate the
     // broadcast joins preserve sym's src hash partitioning through every
     // checkpoint, so the loop's neighbor join needs no new exchange.
-    val tagged = sym
+    val tagged = scratch.checkpoint(sym
       .join(buildSide(deg.select(col("src"), col("deg").as("sdeg"))), Seq("src"))
-      .join(buildSide(deg.select(col("src").as("dst"), col("deg").as("ddeg"))), Seq("dst"))
-      .localCheckpoint()
-    freeCheckpoint(deg) // both consumers are inside tagged's blocks now
+      .join(buildSide(deg.select(col("src").as("dst"), col("deg").as("ddeg"))), Seq("dst")),
+      eager = true)
+    scratch.free(deg) // both consumers are inside tagged's blocks now
     val isolatedPair = col("sdeg") === 1 && col("ddeg") === 1
-    val pairLabels = tagged
+    val pairLabels = scratch.checkpoint(tagged
       .filter(isolatedPair)
-      .select(col("src").as("id"), least(col("src"), col("dst")).as("component"))
-      .localCheckpoint()
+      .select(col("src").as("id"), least(col("src"), col("dst")).as("component")), eager = true)
     val residualRaw = tagged.filter(!isolatedPair).select("src", "dst")
-    val residual =
-      (if (labelsBroadcastable) residualRaw else residualRaw.repartition(col("src")))
-        .localCheckpoint()
-    freeCheckpoint(sym)    // superseded by tagged
-    freeCheckpoint(tagged) // superseded by pairLabels + residual
+    val residual = scratch.checkpoint(
+      if (labelsBroadcastable) residualRaw else residualRaw.repartition(col("src")), eager = true)
+    scratch.free(sym)    // superseded by tagged
+    scratch.free(tagged) // superseded by pairLabels + residual
 
     // the empty-residual convergence check rides the label-init checkpoint
     // job as an observed metric — one fewer job than a count() over the
     // just-materialized blocks
     val initObs = org.apache.spark.sql.Observation("cc_labels_init_n")
-    var labels = residual
+    var labels = scratch.checkpoint(residual
       .select(col("src").as("id"))
       .distinct()
       .withColumn("component", col("id"))
-      .observe(initObs, count(lit(1)).as("n"))
-      .localCheckpoint()
+      .observe(initObs, count(lit(1)).as("n")), eager = true)
     var gen: DataFrame = labels // current generation's RAW checkpointed DF
 
     var iter = 0
@@ -207,7 +195,7 @@ object Cluster {
       val obs = org.apache.spark.sql.Observation(s"cc_changed_$iter")
       // the broadcast build side re-evaluates the stepped subtree, which
       // the persist above absorbs (first evaluation fills the cache)
-      val jumped = stepped
+      val jumped = scratch.checkpoint(stepped
         .join(
           buildSide(stepped.select(col("id").as("component"), col("component").as("parent_comp"))),
           Seq("component"),
@@ -216,11 +204,11 @@ object Cluster {
           col("id"),
           coalesce(col("parent_comp"), col("component")).as("component"),
           col("old_comp"))
-        .observe(obs, sum(when(col("component") =!= col("old_comp"), 1L).otherwise(0L)).as("changed"))
-        .localCheckpoint()
+        .observe(obs, sum(when(col("component") =!= col("old_comp"), 1L).otherwise(0L)).as("changed")),
+        eager = true)
       val changed = obs.get("changed").asInstanceOf[Long]
       stepped.unpersist(false)
-      freeCheckpoint(gen) // superseded generation — the round-1 leak
+      scratch.free(gen) // superseded generation — the round-1 leak
       converged = changed == 0
       gen = jumped
       labels = jumped.select("id", "component")
@@ -232,8 +220,8 @@ object Cluster {
     val out = (if (verticesDistinct) vertexIds else vertexIds.distinct())
       .join(labels.unionByName(pairLabels), Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-    freeCheckpoint(residual)
-    val finalGen = gen
-    (out, iter, () => { freeCheckpoint(finalGen); freeCheckpoint(pairLabels) })
+    scratch.free(residual)
+    // the final generation and pairLabels stay tracked: `out` reads them
+    (out, iter)
   }
 }

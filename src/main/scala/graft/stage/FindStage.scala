@@ -4,6 +4,7 @@ import graft.sql.{functions => gf}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed `findMin`/`getMatches` (Internal.hs:76-106, Simple.hs:176-186)
   * plus the two dedup verification flavors.
@@ -29,12 +30,17 @@ object FindStage {
     * tiny next to the corpus): hint the probe-gram side broadcast so the
     * postings table is NEVER shuffled for a lookup; disable for bulk-probe
     * workloads whose gram sets exceed broadcast size.
+    *
+    * The cascade checkpoints each non-final size's matches into `scratch`;
+    * a caller looping over batches releases it after each write
+    * (StreamFind.writeBatch) — under [[Scratch.noop]] they live for the session.
     */
   def findMin(
       probes: DataFrame,
       idx: IndexTables,
       minScore: Double,
-      broadcastProbes: Boolean = true): DataFrame = {
+      broadcastProbes: Boolean = true,
+      scratch: Scratch = Scratch.noop): DataFrame = {
     val p = probes
       .select(col("query_id").cast("string").as("query_id"), col("query"))
       .withColumn("qkey", lower(col("query")))
@@ -49,7 +55,7 @@ object FindStage {
       .select("query_id", "qkey")
 
     val fuzzy = cascade(rest, idx, minScore, excludeSelf = false,
-      smallProbes = broadcastProbes) { (remaining, n) =>
+      smallProbes = broadcastProbes, scratch = scratch) { (remaining, n) =>
       // map-side gram counts (GramCountsExpr) — no groupBy per probe
       remaining
         .select(col("query_id"), explode(gf.gramCounts(col("qkey"), n)).as("e"))
@@ -91,7 +97,8 @@ object FindStage {
       idx: IndexTables,
       minScore: Double,
       excludeSelf: Boolean,
-      smallProbes: Boolean = false
+      smallProbes: Boolean = false,
+      scratch: Scratch = Scratch.noop
   )(qgrams: (DataFrame, Int) => DataFrame): DataFrame = {
     val conf = idx.conf
 
@@ -180,11 +187,10 @@ object FindStage {
       // join, the window, the rerank) is re-planned and re-executed once
       // per consumer (profiler: twin 15.5 s stages computing the identical
       // size-3 pass concurrently on q_audio_dedup). Blocks are match-sized
-      // (probes x top-50 in lev mode), released with the session.
+      // (probes x top-50 in lev mode), released with `scratch`.
       val found =
         if (n == lastSize) foundRaw
-        else foundRaw.localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        else scratch.checkpoint(foundRaw, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
 
       acc = Some(acc.map(_.unionByName(found)).getOrElse(found))
       remaining = remaining.join(found.select("query_id").distinct(), Seq("query_id"), "left_anti")
@@ -213,11 +219,12 @@ object FindStage {
   }
 
   /** Above this many candidate pairs the pair side is no longer hinted
-    * broadcast in [[verifyPairs]] (a corpus-scale pair set must shuffle;
-    * a bench/query-scale one should never force the corpus-sized sigs /
-    * items tables through an exchange).
+    * broadcast in [[verifyPairs]] or in the substring pass's key joins
+    * (Candidates.substringPairs): a corpus-scale pair set must shuffle; a
+    * bench/query-scale one should never force the corpus-sized sigs /
+    * items / key tables through an exchange.
     */
-  private val broadcastPairLimit = 1000000L
+  private[stage] val broadcastPairLimit = 1000000L
 
   /** Pair verification for candidate pairs (a_id, b_id) — the 10^12-scale
     * path: the reference scoring kernel applied per candidate pair.
@@ -305,8 +312,7 @@ object FindStage {
       // table unshuffled (and per-batch streaming verification O(batch)
       // instead of O(state) for these joins); beyond the limit the joins
       // stay shuffle-hash on the table side
-      val gatedLev = scratch.track(gatedRaw.localCheckpoint(false,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+      val gatedLev = scratch.checkpoint(gatedRaw, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
       val gatedSmall = gatedLev.count() <= broadcastPairLimit
       val gatedSide = if (gatedSmall) gatedLev.hint("broadcast") else gatedLev.hint("shuffle_hash")
       val kbSide = if (gatedSmall) kb else kb.hint("shuffle_hash")
@@ -320,7 +326,7 @@ object FindStage {
 
     // consumed by three branches below; scratch once the caller's verified
     // edges are materialized
-    val gated = scratch.track(gatedRaw.localCheckpoint())
+    val gated = scratch.checkpoint(gatedRaw, eager = true)
 
     // semi-join prune postings to candidate ids BEFORE the pair join: the
     // candidate id set is tiny relative to the corpus (broadcast), so the
@@ -329,7 +335,7 @@ object FindStage {
     // materialized — postings is a recompute-on-read projection of items,
     // so feeding the a-side and b-side from separate scans (round 1) paid
     // the corpus-wide gram extraction twice
-    val pruned = scratch.track(prunedPostings(gated, idx).localCheckpoint(false))
+    val pruned = scratch.checkpoint(prunedPostings(gated, idx), eager = false)
     val pa = pruned
       .select(col("item_id").as("a_id"), col("gram_size"), col("gram"), col("cnt").as("a_cnt"))
     val pb = pruned

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.conf.FuzzyConf
 import graft.io.TableIO
-import graft.stage.{Candidates, Cluster, FindStage, IndexBuild, IndexTables}
+import graft.stage.{Candidates, Cluster, FindStage, IndexBuild, IndexTables, Scratch}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -57,7 +58,7 @@ object StreamDedup {
     * first batch — alarming noise in otherwise-clean driver logs.
     */
   private def pathExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -73,26 +74,32 @@ object StreamDedup {
     catch { case _: org.apache.spark.sql.AnalysisException => fallback }
 
   /** Highest batch id ever committed into `stateDir`, from the `_last_batch`
-    * marker [[processBatch]] writes after each edges commit. None when the
-    * state is fresh (or the marker is a torn write — the guard then stays
-    * permissive rather than bricking a recovering stream).
+    * marker [[processBatch]] writes (atomically) after each edges commit;
+    * None when the state is fresh. An unparseable marker throws: reading it
+    * as absent would silently disable the batch-id guard.
     */
   private def lastCommittedBatch(spark: SparkSession, stateDir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/_last_batch")
+    val p = new Path(s"$stateDir/_last_batch")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else try {
+    else {
       val in = fs.open(p)
-      val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
-      Some(new String(bytes, "UTF-8").trim.toLong)
-    } catch { case scala.util.control.NonFatal(_) => None }
+      val text =
+        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
+        finally in.close()
+      Some(text.toLongOption.getOrElse(
+        throw new IllegalStateException(s"unparseable batch marker $p: '$text'")))
+    }
   }
 
+  /** Temp file + rename: a crash mid-write never leaves a torn marker. */
   private def writeCommittedBatch(spark: SparkSession, stateDir: String, batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/_last_batch")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+    val p = new Path(s"$stateDir/_last_batch")
+    val tmp = new Path(s"$stateDir/_last_batch.tmp")
+    val fc = FileContext.getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
+    val out = fc.create(tmp, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
     try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
+    fc.rename(tmp, p, Options.Rename.OVERWRITE)
   }
 
   /** Start the streaming dedup: `clips` is a streaming DataFrame carrying
@@ -143,15 +150,10 @@ object StreamDedup {
           "the stream at a fresh stateDir.")
     }
 
-    // the arriving micro-batch feeds FIVE separate actions below (items
-    // upsert, members checkpoint, sigs upsert, keys write, pairs
-    // materialization); without a checkpoint each would re-read the
-    // batch's offset range from the streaming source — 4-5x source I/O
-    // and decode per batch on the hot path
-    val keyed = batch
-      .select(col(idCol).cast("string").as("clip_id"), col(textCol).as("original"))
-      .withColumn("key", lower(col("original")))
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+    // every table this batch checkpoints, released once in the finally
+    // below: after the edges write and the side thread's members upsert
+    // (their last consumers), whether the batch commits or fails
+    val scratch = new Scratch()
 
     // independent state-table actions below overlap from a side thread
     // (guide §2.6: actions are serial only because the driver calls them
@@ -162,6 +164,21 @@ object StreamDedup {
     // members write still in flight.
     val sideErr = new java.util.concurrent.atomic.AtomicReference[Throwable]
     var sideThread: Thread = null
+
+    // everything below runs under a finally that JOINS the side thread: a
+    // mid-batch failure must not leave the members upsert mutating state
+    // dirs while the caller replays the batch
+    try {
+
+    // the arriving micro-batch feeds FIVE separate actions below (items
+    // upsert, members checkpoint, sigs upsert, keys write, pairs
+    // materialization); without a checkpoint each would re-read the
+    // batch's offset range from the streaming source — 4-5x source I/O
+    // and decode per batch on the hot path
+    val keyed = scratch.checkpoint(batch
+      .select(col(idCol).cast("string").as("clip_id"), col(textCol).as("original"))
+      .withColumn("key", lower(col("original"))),
+      eager = false, StorageLevel.MEMORY_AND_DISK_SER)
 
     // the batch's per-key winner, deterministically (a distributed batch
     // has no row order — same rule as IndexBuild/TableIO.upsert)
@@ -176,16 +193,16 @@ object StreamDedup {
     val items = spark.read.parquet(s"$stateDir/items")
 
     // every batch clip maps to the item the STATE says owns its key —
-    // replay-stable, since the upsert above is a no-op the second time
-    val batchMembers = keyed
+    // replay-stable, since the upsert above is a no-op the second time.
+    // EAGER: both the overlapped members upsert and the exact-edge branch
+    // below consume it — materializing before the side thread starts
+    // keeps the two consumers on blocks instead of racing to compute the
+    // same lazy checkpoint
+    val batchMembers = scratch.checkpoint(keyed
       .select("clip_id", "key")
       .join(items.select("key", "item_id"), Seq("key"))
-      .select("clip_id", "item_id")
-      // EAGER: both the overlapped members upsert and the exact-edge branch
-      // below consume it — materializing before the side thread starts
-      // keeps the two consumers on blocks instead of racing to compute the
-      // same lazy checkpoint
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+      .select("clip_id", "item_id"),
+      eager = true, StorageLevel.MEMORY_AND_DISK_SER)
     sideThread = new Thread(
       () =>
         try {
@@ -194,10 +211,6 @@ object StreamDedup {
         } catch { case t: Throwable => sideErr.set(t) },
       "graft-members-upsert")
     sideThread.start()
-    // everything below runs under a finally that JOINS the side thread: a
-    // mid-batch failure must not leave the members upsert mutating state
-    // dirs while the caller replays the batch
-    try {
 
     // genuinely-new items = batch winners that WON their key in state AND
     // whose fused keys are not already in the keys state from an EARLIER
@@ -226,8 +239,8 @@ object StreamDedup {
     // micro-batch) reproduced this very frame. Checkpointed: consumed by
     // the upsert AND by fusedKeyed below.
     label("sigs upsert")
-    val newSigs = IndexBuild.signatures(newItems, conf)
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+    val newSigs = scratch.checkpoint(IndexBuild.signatures(newItems, conf),
+      eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     TableIO.upsert(spark, s"$stateDir/sigs", newSigs, "item_id")
 
     // fused-KEY state: this batch's key rows land partitioned by batch_id
@@ -238,8 +251,8 @@ object StreamDedup {
     // checkpointed: consumed by the keys write AND by candidate generation
     // below — without it the whole newSigs derivation (state reads + the
     // signature kernel) re-runs for each
-    val newKeys = Candidates.fusedKeyed(newSigs)
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+    val newKeys = scratch.checkpoint(Candidates.fusedKeyed(newSigs),
+      eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     label("keys write")
     newKeys
       .withColumn("batch_id", lit(batchId))
@@ -260,10 +273,9 @@ object StreamDedup {
       .unionByName(newKeys.select("bkey", "ktype", "item_id", "sh"))
 
     label("candidate pairs")
-    val scratch = new graft.stage.Scratch()
-    val pairs = Candidates
-      .incrementalPairsFromKeys(newKeys, allKeys, maxHamming = 3, conf.maxSaltedBucket, scratch)
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+    val pairs = scratch.checkpoint(
+      Candidates.incrementalPairsFromKeys(newKeys, allKeys, maxHamming = 3, conf.maxSaltedBucket, scratch),
+      eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     // the batch scratch rides into verifyPairs too: in cosine mode it
     // localCheckpoints gated pairs + pruned postings internally, and the
     // default noop scratch would pin those blocks forever — one leaked
@@ -309,33 +321,17 @@ object StreamDedup {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(s"$stateDir/edges")
-    // the edges write above is the last consumer of pairs AND of the
-    // pruned key membership incrementalPairsFromKeys tracked — release
-    // them here (batchMembers waits: the side thread's members upsert
-    // still reads its blocks)
-    scratch.release()
-    Seq(pairs, newKeys, newSigs, keyed).foreach { df =>
-      org.apache.spark.sql.GraftColumnBridge.checkpointedRdd(df)
-        .foreach(_.unpersist(blocking = false))
+    } finally {
+      if (sideThread != null) sideThread.join()
+      scratch.release()
     }
-    } finally sideThread.join()
     // the overlapped members upsert must be durably finished (and any
     // failure propagated) before the batch is marked committed
     if (sideErr.get() != null) throw sideErr.get()
     writeCommittedBatch(spark, stateDir, batchId)
     spark.sparkContext.setJobDescription(null)
-    org.apache.spark.sql.GraftColumnBridge.checkpointedRdd(batchMembers)
-      .foreach(_.unpersist(blocking = false))
   }
 
-  /** The state tables as the batch kernel's IndexTables view, so
-    * verification runs the EXACT batch code path. postings/norms/bands are
-    * the same recompute-on-read projections the batch pipeline uses
-    * (FuzzyPipeline.mapSideStages) — and verifyPairs semi-join-prunes
-    * postings to candidate endpoints before the scan, so the cosine-mode
-    * projections never materialize corpus-wide here either (lev mode, the
-    * default, reads only items + sigs).
-    */
   /** [[stateIndex]] minus the n_members aggregation: the per-batch
     * verification path reads items only as (item_id, key) — plus the
     * postings/norms projections OF those columns in cosine mode — so
@@ -353,6 +349,14 @@ object StreamDedup {
       sigs.select(col("item_id"), explode(col("band_hashes")).as("band_key")))
   }
 
+  /** The state tables as the batch kernel's IndexTables view, so
+    * verification runs the EXACT batch code path. postings/norms/bands are
+    * the same recompute-on-read projections the batch pipeline uses
+    * (FuzzyPipeline.mapSideStages) — and verifyPairs semi-join-prunes
+    * postings to candidate endpoints before the scan, so the cosine-mode
+    * projections never materialize corpus-wide here either (lev mode, the
+    * default, reads only items + sigs).
+    */
   def stateIndex(spark: SparkSession, stateDir: String, conf: FuzzyConf): IndexTables = {
     val items = spark.read.parquet(s"$stateDir/items")
     val members = spark.read.parquet(s"$stateDir/members")
@@ -387,27 +391,20 @@ object StreamDedup {
     * the incrementally-maintained state, labels are a (cheap, sparse)
     * derivation from it.
     *
-    * NOTE: the returned frame is an eager local checkpoint whose blocks
-    * stay pinned for the session — fine for a one-shot read, but a
-    * long-lived streaming driver that relabels PERIODICALLY accumulates
-    * one corpus-sized block set per call. Such callers should use
-    * [[labelsReleasable]] and release each generation once consumed.
+    * The result is an eager local checkpoint taken into `scratch` (the CC
+    * loop's own blocks are freed before return). Under the default
+    * [[Scratch.noop]] it stays pinned for the session — fine for a one-shot
+    * read, but a driver that relabels PERIODICALLY passes its own scratch
+    * and releases it once the labels are consumed.
     */
-  def labels(spark: SparkSession, stateDir: String): DataFrame =
-    labelsReleasable(spark, stateDir)._1
-
-  /** [[labels]] plus a release hook that unpersists the result's blocks;
-    * call it once the labels have been written out / consumed.
-    */
-  def labelsReleasable(spark: SparkSession, stateDir: String): (DataFrame, () => Unit) = {
+  def labels(spark: SparkSession, stateDir: String, scratch: Scratch = Scratch.noop): DataFrame = {
     val vertices = spark.read.parquet(s"$stateDir/members").select(col("clip_id").as("id"))
-    val (labeled, _, release) = Cluster.connectedComponentsReleasable(
-      vertices, edges(spark, stateDir).select("a_id", "b_id"))
-    val out = labeled
-      .select(col("id").as("clip_id"), col("component"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    release()
-    (out, () => org.apache.spark.sql.GraftColumnBridge.checkpointedRdd(out)
-      .foreach(_.unpersist(blocking = false)))
+    val loop = new Scratch()
+    try {
+      val (labeled, _) = Cluster.connectedComponentsReleasable(
+        vertices, edges(spark, stateDir).select("a_id", "b_id"), loop)
+      scratch.checkpoint(labeled.select(col("id").as("clip_id"), col("component")),
+        eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+    } finally loop.release()
   }
 }

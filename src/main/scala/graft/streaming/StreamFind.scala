@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.stage.{FindStage, IndexTables}
+import graft.stage.{FindStage, IndexTables, Scratch}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -39,22 +39,27 @@ object StreamFind {
 
   /** One micro-batch's find + idempotent write (exposed for replay tests):
     * re-running the same (batch, batchId) replaces that batch's partition,
-    * leaving exactly one copy of its results.
+    * leaving exactly one copy of its results. The cascade's match blocks
+    * go into a per-batch scratch released after the write, so a long-lived
+    * query pins nothing per batch.
     */
   def writeBatch(
       batch: DataFrame,
       batchId: Long,
       idx: IndexTables,
       minScore: Double,
-      outDir: String): Unit =
-    FindStage
-      .findMin(batch, idx, minScore)
+      outDir: String): Unit = {
+    val scratch = new Scratch()
+    try FindStage
+      .findMin(batch, idx, minScore, scratch = scratch)
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(outDir)
+    finally scratch.release()
+  }
 
   /** Streaming clip ingestion: append arriving clips to the corpus table;
     * the next pipeline run (or an Iceberg MERGE on a real catalog) folds

@@ -482,9 +482,9 @@ class FuzzyPipelineSpec extends AnyFunSuite with Matchers {
 
   test("a checkpoint-dir clusters() run leaves ZERO persisted RDD blocks behind") {
     // every block source in ckpt-dir mode has a release path: stage tables
-    // are parquet (no blocks), branch matSer blocks free after the edges
-    // write, stage scratch frees after the branches, CC loop generations
-    // free in-loop and the survivors through the release hook. Net block
+    // are parquet (no blocks), branch blocks free after the edges write,
+    // stage scratch frees after the branches, CC loop generations free
+    // in-loop and the survivors after the clusters write. Net block
     // count must return to baseline — the long-lived-driver invariant at
     // 10^12 scale, and the regression pin for any future leak.
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-blocks").toString

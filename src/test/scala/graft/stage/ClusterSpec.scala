@@ -116,8 +116,8 @@ class ClusterSpec extends AnyFunSuite with Matchers {
       "p" -> "p", "q" -> "p", "r" -> "p",
       "x" -> "x", "y" -> "x", "lone" -> "lone")
     for (gate <- Seq(2000000L, 0L)) {
-      val (labels, iters, _) =
-        Cluster.connectedComponentsReleasable(vertices, edges, maxIter = 25, maxBroadcastEndpoints = gate)
+      val (labels, iters) = Cluster.connectedComponentsReleasable(
+        vertices, edges, Scratch.noop, maxIter = 25, maxBroadcastEndpoints = gate)
       withClue(s"gate=$gate: ") {
         labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap shouldBe expect
         iters should be > 0 // the path/triangle residual still iterates
@@ -127,16 +127,19 @@ class ClusterSpec extends AnyFunSuite with Matchers {
 
   test("the release hook frees the loop's surviving label blocks after the result materializes") {
     // triangle (iterates) + isolated pair (contracts): both block sources
-    // the hook must free — the final label generation and the pair labels
+    // the caller's scratch must hold — the final label generation and the
+    // pair labels — and nothing else the loop checkpointed
     val edges = Seq(("p", "q"), ("q", "r"), ("r", "p"), ("y", "x")).toDF("a_id", "b_id")
     val vertices = Seq("p", "q", "r", "x", "y", "lone").toDF("id")
     def stored() = spark.sparkContext.getRDDStorageInfo.length
     val before = stored()
-    val (labels, iters, release) = Cluster.connectedComponentsReleasable(vertices, edges)
+    val scratch = new Scratch
+    val (labels, iters) = Cluster.connectedComponentsReleasable(vertices, edges, scratch)
     iters should be > 0
+    scratch.pending shouldBe 2
     labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap shouldBe Map(
       "p" -> "p", "q" -> "p", "r" -> "p", "x" -> "x", "y" -> "x", "lone" -> "lone")
-    release()
+    scratch.release()
     // unpersist is async -> bounded retry before asserting all blocks from
     // this call are gone
     var waited = 0
@@ -150,8 +153,8 @@ class ClusterSpec extends AnyFunSuite with Matchers {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("p", "q"), ("q", "r"), ("r", "p"))
       .toDF("a_id", "b_id")
     val vertices = Seq("a", "b", "c", "d", "p", "q", "r", "lone").toDF("id")
-    val (labels, iters, _) =
-      Cluster.connectedComponentsReleasable(vertices, edges, maxIter = 25, maxBroadcastEndpoints = 0L)
+    val (labels, iters) = Cluster.connectedComponentsReleasable(
+      vertices, edges, Scratch.noop, maxIter = 25, maxBroadcastEndpoints = 0L)
     val byId = labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     byId shouldBe Map(
       "a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",

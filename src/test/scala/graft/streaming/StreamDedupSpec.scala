@@ -169,6 +169,55 @@ class StreamDedupSpec extends AnyFunSuite with Matchers {
       "clip_id", "transcript", conf, stateDir)
   }
 
+  test("an unparseable _last_batch marker fails the batch before it writes any state") {
+    val (stateDir, _) = newDirs()
+    // a damaged marker must not silently disable the batch-id guard
+    java.nio.file.Files.write(java.nio.file.Paths.get(stateDir, "_last_batch"),
+      "not-a-batch-id".getBytes("UTF-8"))
+    an[IllegalStateException] should be thrownBy
+      StreamDedup.processBatch(batch1.toDF("clip_id", "transcript"), 0L,
+        "clip_id", "transcript", FuzzyConf(), stateDir)
+    new java.io.File(stateDir).list().toSet shouldBe Set("_last_batch")
+  }
+
+  private def stored() = spark.sparkContext.getRDDStorageInfo.length
+  // unpersist is async -> bounded wait for the block count to fall back
+  private def awaitStoredAtMost(n: Int): Int = {
+    var waited = 0
+    while (stored() > n && waited < 20) { Thread.sleep(250); waited += 1 }
+    stored()
+  }
+
+  test("a committed micro-batch leaves no persisted RDD blocks behind") {
+    val (stateDir, _) = newDirs()
+    val before = stored()
+    StreamDedup.processBatch(batch1.toDF("clip_id", "transcript"), 0L,
+      "clip_id", "transcript", FuzzyConf(), stateDir)
+    StreamDedup.edges(spark, stateDir).count() should be > 0L
+    // a periodic relabel holds its result in the caller's scratch only
+    val relabel = new graft.stage.Scratch
+    StreamDedup.labels(spark, stateDir, relabel)
+      .as[(String, String)].collect().toMap.apply("c001") shouldBe "c000"
+    relabel.release()
+    awaitStoredAtMost(before) should be <= before
+  }
+
+  test("a micro-batch that fails after checkpointing still frees its blocks") {
+    val (stateDir, _) = newDirs()
+    // a plain FILE where the edges directory belongs: every table of the
+    // batch is checkpointed and materialized before the edges step reads
+    // it, which then fails
+    java.nio.file.Files.write(java.nio.file.Paths.get(stateDir, "edges"),
+      "not a directory".getBytes("UTF-8"))
+    val before = stored()
+    an[Exception] should be thrownBy
+      StreamDedup.processBatch(batch1.toDF("clip_id", "transcript"), 0L,
+        "clip_id", "transcript", FuzzyConf(), stateDir)
+    new java.io.File(stateDir, "keys").isDirectory shouldBe true // it got that far
+    new java.io.File(stateDir, "_last_batch").exists shouldBe false // not committed
+    awaitStoredAtMost(before) should be <= before
+  }
+
   test("streaming + periodic substring compaction recovers every planted pair at 6k clips") {
     import org.apache.spark.sql.functions.col
     val (stateDir, _) = newDirs()

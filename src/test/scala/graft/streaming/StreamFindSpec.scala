@@ -23,6 +23,8 @@ class StreamFindSpec extends AnyFunSuite with Matchers {
     val stream = MemoryStream[(String, String)]
     val outDir = java.nio.file.Files.createTempDirectory("stream-find-out").toString
     val ckDir = java.nio.file.Files.createTempDirectory("stream-find-ck").toString
+    def stored() = spark.sparkContext.getRDDStorageInfo.length
+    val storedBefore = stored()
     val q = StreamFind.findStream(
       stream.toDF().toDF("query_id", "query"), idx, 0.33, outDir, ckDir)
 
@@ -51,6 +53,13 @@ class StreamFindSpec extends AnyFunSuite with Matchers {
       Seq(("q0", "percolator"), ("q1", "alaska")).toDF("query_id", "query"),
       batchId = 0L, idx, 0.33, outDir)
     spark.read.parquet(outDir).count() shouldBe before
+
+    // every micro-batch releases the cascade's match blocks after its
+    // write: a long-lived query pins nothing per batch. unpersist is async
+    // -> bounded wait before asserting
+    var waited = 0
+    while (stored() > storedBefore && waited < 20) { Thread.sleep(250); waited += 1 }
+    stored() should be <= storedBefore
   }
 
   test("ingestStream: restart from checkpoint does not duplicate ingested rows") {
