@@ -12,7 +12,8 @@ import org.apache.spark.storage.StorageLevel
   * Monad.hs:48-56): construct over a corpus, then query or dedup.
   *
   * Construction is lazy (nothing runs until an action); with a
-  * `checkpointDir` every derived table is written once and resumed
+  * `checkpointDir` every stored table (items, members, sigs, candidates,
+  * edges, clusters) is written once and resumed
   * idempotently by config-hash (north rule: "resumable from checkpoint with
   * per-partition lineage + metrics").
   *
@@ -40,19 +41,10 @@ final case class FuzzyPipeline(
 
   private val hash = TableIO.confHash((conf, idCol, textCol))
 
-  /** Stages that are pure map-side projections of an already-materialized
-    * parent (postings/norms explode from items via GramCountsExpr, bands
-    * from sigs): storing them buys nothing — recompute is a cheap parallel
-    * map — and at bench scale the stored posting rows (|corpus| x |grams|)
-    * caused enough memory pressure that 32 cores ran SLOWER than 8.
-    * They are still written in checkpoint-dir mode (resume contract).
-    */
-  private val mapSideStages = Set("postings", "norms", "bands")
-
   private def ckpt(name: String)(df: => DataFrame): DataFrame =
     checkpointDir match {
       case Some(dir) => TableIO.checkpoint(spark, s"$dir/$name", hash, name)(df)
-      // without a checkpoint dir, materialize the compute-heavy stages so
+      // without a checkpoint dir, materialize every stage table so
       // the dedup/signature work runs once, not per consuming join branch.
       // localCheckpoint (row-based) beats .cache(): the columnar in-memory
       // builder is ~3x slower on array-typed columns (signatures),
@@ -67,9 +59,7 @@ final case class FuzzyPipeline(
       // computed, and no standalone count() job is paid per stage (round 1
       // ran one eager job per stage even when unused). Untracked: the
       // blocks are the stage table itself and live with the pipeline.
-      case None =>
-        if (mapSideStages(name)) df
-        else Scratch.noop.checkpoint(df, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+      case None => Scratch.noop.checkpoint(df, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     }
 
   /** Block scope of a stage whose result reads its own checkpoints (edge
@@ -87,10 +77,11 @@ final case class FuzzyPipeline(
     out
   }
 
-  /** The six index tables (SURVEY.md §1.2); each stage materializes through
-    * `ckpt` and downstream stages consume the MATERIALIZED table (see
-    * IndexBuild scaladoc — deriving from pre-materialization plans would
-    * recompute the upstream lineage once per table).
+  /** The index tables (SURVEY.md §1.2): items, members and sigs
+    * materialize through `ckpt`, postings and norms are projections of the
+    * materialized items, and downstream stages consume the MATERIALIZED
+    * tables (see IndexBuild scaladoc — deriving from pre-materialization
+    * plans would recompute the upstream lineage once per table).
     */
   lazy val index: IndexTables =
     IndexBuild(input, idCol, textCol, conf, (stage, df) => ckpt(stage)(df),
@@ -151,14 +142,10 @@ final case class FuzzyPipeline(
   /** `addManyToSet`'s inserted-sublist (Simple.hs:293-301): which of the
     * new rows introduced a key not already present.
     */
-  def insertedBy(more: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.lower
-    more
-      .select(col(idCol).cast("string").as("clip_id"), col(textCol).as("original"))
-      .withColumn("key", lower(col("original")))
+  def insertedBy(more: DataFrame): DataFrame =
+    IndexBuild.keyed(more, idCol, textCol)
       .join(index.items.select("key"), Seq("key"), "left_anti")
       .select("clip_id", "original")
-  }
 
   // ---- reference inspection API (Simple.hs:329-348) ---------------------
 
@@ -193,9 +180,11 @@ final case class FuzzyPipeline(
     * instead of head-of-line-blocking on whichever branch submitted first —
     * a wide stage in one branch can no longer starve the others' short
     * stages, which is what keeps the critical-path branch moving.
-    * Branch failures propagate.
+    * Every branch is awaited before the first branch failure is rethrown:
+    * a sibling still running would otherwise take checkpoints into the
+    * caller's scratch after the caller has already released it.
     */
-  private def concurrently(branches: (() => DataFrame)*): Seq[DataFrame] = {
+  private[api] def concurrently(branches: (() => DataFrame)*): Seq[DataFrame] = {
     val sc = spark.sparkContext
     val pool = java.util.concurrent.Executors.newFixedThreadPool(branches.size)
     try {
@@ -208,7 +197,7 @@ final case class FuzzyPipeline(
           }
         })
       }
-      fs.map(_.get())
+      fs.map(f => scala.util.Try(f.get())).map(_.get)
     } finally pool.shutdown()
   }
 

@@ -21,7 +21,6 @@ package graft.conf
   * @param minScore       drop results scoring below this (`Simple.hs:226`)
   * @param topKRerank     cosine candidates kept per query before the
   *                       Levenshtein rerank (`Internal.hs:90` - take 50)
-  * @param minhashHashes  number of MinHash permutations (= bands * rowsPerBand)
   * @param minhashBands   LSH band count
   * @param rowsPerBand    MinHash rows per band. With independent hash
   *                       functions the candidate probability would be the
@@ -39,8 +38,6 @@ package graft.conf
   *                       0.05 (CHANGES.md). Token-drop/append dups at
   *                       lower j are covered by the exact-substring pass,
   *                       byte-identical ones by the exact pass
-  * @param simhashBits    SimHash fingerprint width (64 = one long)
-  * @param seed           base seed for all hash families (deterministic)
   * @param maxBandBucket  rows sharing one LSH band value before the bucket
   *                       is declared HOT: hot buckets switch from the
   *                       direct in-bucket self-join to SALTED pair
@@ -70,7 +67,6 @@ package graft.conf
   *                       sqrt(j(1-j)/H) ~ 0.045 at H=126); a run with a
   *                       LOWER minScore must lower this gate in step or
   *                       low-J pairs are silently lost before scoring
-  * @param shufflePartitions value for spark.sql.shuffle.partitions
   * @param substringPrefixLen join-key prefix length for the substring-dup
   *                       pass (suffix-array stand-in, SURVEY §7.4)
   * @param substringMinRatio minimum len(contained)/len(container) for a
@@ -82,26 +78,20 @@ final case class FuzzyConf(
     useLevenshtein: Boolean = true,
     minScore: Double = 0.33,
     topKRerank: Int = 50,
-    minhashHashes: Int = 126,
     minhashBands: Int = 21,
     rowsPerBand: Int = 6,
-    simhashBits: Int = 64,
-    seed: Long = 42L,
     maxBandBucket: Int = 100,
     saltChunk: Int = 64,
     maxSaltedBucket: Int = 4096,
     maxPostingsPerGram: Int = 10000,
     sigGateMinJaccard: Double = 0.3,
-    shufflePartitions: Int = 32,
     substringPrefixLen: Int = 16,
     substringMinRatio: Double = 0.5
 ) {
   require(gramLo >= 2, "gram size must be at least 2 (Internal.hs:193)")
   require(gramHi >= gramLo, "gramHi must be >= gramLo")
-  require(
-    minhashBands * rowsPerBand == minhashHashes,
-    "minhashHashes must equal minhashBands * rowsPerBand"
-  )
+  /** MinHash signature length: one component per band row. */
+  def minhashHashes: Int = minhashBands * rowsPerBand
   /** Gram sizes in query-cascade order: upper bound first (Simple.hs:181). */
   def sizesDesc: Seq[Int] = gramHi.to(gramLo, -1)
   def sizes: Seq[Int] = gramLo to gramHi

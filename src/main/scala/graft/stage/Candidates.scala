@@ -21,8 +21,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object Candidates {
 
-  /** (src_id, dst_id, kind="exact", score=1.0): members -> their item root.
-    * Equivalent under connected components to all-pairs within a key group.
+  /** (a_id = item root, b_id = member, kind="exact", score=1.0) for every
+    * member that is not its item's root. Equivalent under connected
+    * components to all-pairs within a key group. The batch pipeline applies
+    * it to the whole members table, StreamDedup to each micro-batch's.
     */
   def exactEdges(members: DataFrame): DataFrame =
     members
@@ -309,27 +311,21 @@ object Candidates {
       .filter(col("a_id") =!= col("b_id"))
       .select("a_id", "b_id")
       .distinct()
-    // same shape as the verify gate's key joins (FindStage.verifyPairs):
+    // same endpoint joins as the verify gate's (FindStage.endpointJoin):
     // the candidate set is tiny after the prefix match + fanout cap, and
     // joining it to the corpus-sized longK twice as sort-merge shuffles and
     // SORTS the whole key table both times. Materialize the candidates
-    // (scratch-released), pick the join side from the ACTUAL count —
-    // broadcast keeps longK unshuffled; past the limit, shuffle-hash
-    // (narrow build sides, no sorts) instead of SMJ (guide §3.1).
+    // (scratch-released) and pick the join regime from the ACTUAL count.
     val longPairs = {
-      val candidatePairs =
-        if (lazyPlan) candidatePairsRaw
-        else scratch.checkpoint(candidatePairsRaw, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
-      val candSmall = !lazyPlan && candidatePairs.count() <= FindStage.broadcastPairLimit
-      val candSide =
-        if (lazyPlan) candidatePairs
-        else if (candSmall) candidatePairs.hint("broadcast")
-        else candidatePairs.hint("shuffle_hash")
-      def lkSide(df: DataFrame): DataFrame =
-        if (lazyPlan || candSmall) df else df.hint("shuffle_hash")
-      candSide
-        .join(longK.select(col("item_id").as("a_id"), col("key").as("a_key"), col("klen").as("a_len")), Seq("a_id"))
-        .join(lkSide(longK.select(col("item_id").as("b_id"), col("key").as("b_key"), col("klen").as("b_len"))), Seq("b_id"))
+      val la = longK.select(col("item_id").as("a_id"), col("key").as("a_key"), col("klen").as("a_len"))
+      val lb = longK.select(col("item_id").as("b_id"), col("key").as("b_key"), col("klen").as("b_len"))
+      val joined =
+        if (lazyPlan) candidatePairsRaw.join(la, Seq("a_id")).join(lb, Seq("b_id"))
+        else {
+          val cand = scratch.checkpoint(candidatePairsRaw, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+          FindStage.endpointJoin(cand, cand.count() <= FindStage.broadcastPairLimit, la, lb)
+        }
+      joined
         .filter(col("a_len") < col("b_len") && col("b_key").contains(col("a_key")))
         .select(col("a_id"), col("b_id"),
           (col("a_len").cast("double") / col("b_len")).as("score"))

@@ -226,6 +226,23 @@ object FindStage {
     */
   private[stage] val broadcastPairLimit = 1000000L
 
+  /** A pair table joined to its two endpoint tables: `aSide` on a_id, then
+    * `bSide` on b_id. A `small` pair side is hinted broadcast, so the
+    * corpus-sized endpoint tables are scanned in place; otherwise the pair
+    * side is hinted SHUFFLE-HASH instead of degrading to sort-merge (guide
+    * §3.1), and so is `bSide`, which must be the build of the second join
+    * rather than the (possibly wide) intermediate streaming into it. The
+    * join keys are item ids and the pair rows are narrow: SMJ's full sorts
+    * of the wide streamed sides were the dominant cost of the verify gate
+    * (interleaved A/B at 1.6M clips / 2.47M pairs: SMJ 8.8-24.1 s vs SHJ
+    * 1.9-3.1 s, identical survivor count).
+    */
+  private[stage] def endpointJoin(
+      pairs: DataFrame, small: Boolean, aSide: DataFrame, bSide: DataFrame): DataFrame =
+    if (small) pairs.hint("broadcast").join(aSide, Seq("a_id")).join(bSide, Seq("b_id"))
+    else pairs.hint("shuffle_hash").join(aSide, Seq("a_id"))
+      .join(bSide.hint("shuffle_hash"), Seq("b_id"))
+
   /** Pair verification for candidate pairs (a_id, b_id) — the 10^12-scale
     * path: the reference scoring kernel applied per candidate pair.
     *
@@ -251,24 +268,10 @@ object FindStage {
       scratch: Scratch = Scratch.noop): DataFrame = {
     val conf = idx.conf
 
-    // the candidate volume is known (caller materializes pairs): when it is
-    // query/bench-sized, hint the pair side broadcast so the corpus-sized
-    // sigs/items tables are scanned in place instead of shuffled; beyond
-    // the limit the pair side is hinted SHUFFLE-HASH instead of degrading
-    // to sort-merge (guide §3.1): the join keys are item ids, the pair
-    // rows are narrow, and the streamed sides carry H-component signature
-    // arrays — SMJ's full sorts of those wide streams were the dominant
-    // cost of the gate (interleaved A/B at 1.6M clips / 2.47M pairs:
-    // SMJ 8.8-24.1 s vs SHJ 1.9-3.1 s, identical survivor count)
+    // the candidate volume is known (caller materializes pairs): it picks
+    // the endpoint-join regime of the gate (endpointJoin — here the
+    // streamed sides carry H-component signature arrays)
     val smallPairs = pairs.count() <= broadcastPairLimit
-    def pairSide(df: DataFrame): DataFrame =
-      if (smallPairs) df.hint("broadcast") else df.hint("shuffle_hash")
-    // in the large regime the SECOND join's build must be the (narrow,
-    // corpus-sized) table side, not the signature-carrying intermediate
-    // that streams into it — hint it; in the small regime the pair-side
-    // broadcast already keeps every join map-side and the plan unchanged
-    def tableSide(df: DataFrame): DataFrame =
-      if (smallPairs) df else df.hint("shuffle_hash")
 
     // signature-estimated Jaccard prefilter: a 128-component compare per
     // pair (cheap) gates the scoring joins. stderr ~ sqrt(j(1-j)/H) ~
@@ -281,9 +284,7 @@ object FindStage {
     // through the converter, a measured slice of the edge stage's GC wall
     val sa = idx.sigs.select(col("item_id").as("a_id"), col("sig").as("a_sig"))
     val sb = idx.sigs.select(col("item_id").as("b_id"), col("sig").as("b_sig"))
-    val gatedRaw = pairSide(pairs)
-      .join(sa, Seq("a_id"))
-      .join(tableSide(sb), Seq("b_id"))
+    val gatedRaw = endpointJoin(pairs, smallPairs, sa, sb)
       .filter(gf.estJaccard(col("a_sig"), col("b_sig")) >= conf.sigGateMinJaccard)
       .select("a_id", "b_id")
 
@@ -298,27 +299,20 @@ object FindStage {
       // added no information. Straight to the keys.
       val ka = idx.items.select(col("item_id").as("a_id"), col("key").as("a_key"))
       val kb = idx.items.select(col("item_id").as("b_id"), col("key").as("b_key"))
-      if (smallPairs)
-        return pairSide(gatedRaw)
-          .join(ka, Seq("a_id"))
-          .join(kb, Seq("b_id"))
-          .withColumn("score", gf.levNormSim(col("a_key"), col("b_key")))
-          .filter(col("score") >= minScore)
-          .select(col("a_id"), col("b_id"), lit("fuzzy").as("kind"), col("score"))
       // large regime: the gate is ~100x selective (FuzzyConf scaladoc), so
       // the survivors are usually broadcastable even when the raw pair set
       // was not — materialize them (scratch-released) and pick the key-join
-      // side from the ACTUAL count: broadcast keeps the corpus-sized items
+      // regime from the ACTUAL count: broadcast keeps the corpus-sized items
       // table unshuffled (and per-batch streaming verification O(batch)
-      // instead of O(state) for these joins); beyond the limit the joins
-      // stay shuffle-hash on the table side
-      val gatedLev = scratch.checkpoint(gatedRaw, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
-      val gatedSmall = gatedLev.count() <= broadcastPairLimit
-      val gatedSide = if (gatedSmall) gatedLev.hint("broadcast") else gatedLev.hint("shuffle_hash")
-      val kbSide = if (gatedSmall) kb else kb.hint("shuffle_hash")
-      return gatedSide
-        .join(ka, Seq("a_id"))
-        .join(kbSide, Seq("b_id"))
+      // instead of O(state) for these joins). A small pair set's survivors
+      // are small too and stay a lazy plan.
+      val (gated, gatedSmall) =
+        if (smallPairs) (gatedRaw, true)
+        else {
+          val g = scratch.checkpoint(gatedRaw, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+          (g, g.count() <= broadcastPairLimit)
+        }
+      return endpointJoin(gated, gatedSmall, ka, kb)
         .withColumn("score", gf.levNormSim(col("a_key"), col("b_key")))
         .filter(col("score") >= minScore)
         .select(col("a_id"), col("b_id"), lit("fuzzy").as("kind"), col("score"))

@@ -16,17 +16,20 @@ import org.apache.spark.sql.functions._
   *                   intended semantics: dedup on lower(str), SURVEY §2.1)
   *  - `postings` <-> matchDict (Internal.hs:51): gram -> (item, count)
   *  - `norms`    <-> per-item precomputed magnitudes (Internal.hs:38-41)
-  *  - `sigs`/`bands`: the scale path the reference lacks — MinHash/LSH and
-  *                   SimHash signatures over the gramHi shingle set
+  *  - `sigs`:    the scale path the reference lacks — MinHash signature,
+  *                   SimHash fingerprint and LSH band tokens over the
+  *                   gramHi shingle set
+  *
+  * items, members and sigs are the stored tables; postings and norms are
+  * always projections of items, recomputed on read ([[IndexBuild.tables]]).
   */
 final case class IndexTables(
     conf: FuzzyConf,
-    items: DataFrame, // (item_id, key, original, n_members)
+    items: DataFrame, // (item_id, key, original)
     members: DataFrame, // (clip_id, item_id)
     postings: DataFrame, // (gram_size, gram, item_id, cnt)
     norms: DataFrame, // (item_id, gram_size, magnitude)
     sigs: DataFrame, // (item_id, sig: array<long>, simhash: long, band_hashes: array<long>)
-    bands: DataFrame, // (item_id, band_key: long)
     // When > 0, the corpus is PROVABLY SMALL (SmallInput gate in
     // FuzzyPipeline): compute-dense posting scans may be spread over this
     // many partitions by an explicit exchange. The cost of that exchange is
@@ -39,19 +42,19 @@ final case class IndexTables(
 object IndexBuild {
 
   /** Batch index build = the reference's `addMany_` fold (Internal.hs:140)
-    * as one declarative plan: two shuffles (dedup groupBy, postings
-    * groupBy); Catalyst prunes `bytes`/audio columns away because only
-    * (idCol, textCol) are selected.
+    * as one declarative plan; Catalyst prunes `bytes`/audio columns away
+    * because only (idCol, textCol) are selected.
     *
-    * `mat(stage, df)` materializes each stage table (parquet checkpoint or
-    * localCheckpoint) and its RESULT feeds downstream derivations — bands
-    * build from the materialized sigs, and postings/norms each re-derive
-    * the gram extraction from the materialized ITEMS (both are map-side
-    * projections of items — see FuzzyPipeline.mapSideStages: storing or
-    * chaining them buys nothing, recompute is a cheap parallel map).
-    * Deriving from the pre-materialization plans instead would recompute
-    * the whole upstream lineage once per table (localCheckpoint and
-    * parquet round-trips, unlike .cache(), do not substitute into
+    * `mat(stage, df)` materializes each stored table — items, members,
+    * sigs — (parquet checkpoint or localCheckpoint) and its RESULT feeds
+    * downstream derivations: members and sigs build from the materialized
+    * items, and so do postings/norms ([[tables]]). Those two are map-side
+    * projections of items and are never stored: recompute is a cheap
+    * parallel map, and at bench scale the stored posting rows (|corpus| x
+    * |grams|) caused enough memory pressure that 32 cores ran SLOWER than
+    * 8. Deriving from the pre-materialization plans instead would
+    * recompute the whole upstream lineage once per table (localCheckpoint
+    * and parquet round-trips, unlike .cache(), do not substitute into
     * already-built plans).
     */
   def apply(
@@ -61,49 +64,53 @@ object IndexBuild {
       conf: FuzzyConf,
       mat: (String, DataFrame) => DataFrame = (_, df) => df,
       spreadParallelism: Int = 0): IndexTables = {
-    val keyed = input
-      .select(col(idCol).cast("string").as("clip_id"), col(textCol).as("original"))
-      .withColumn("key", lower(col("original")))
-
-    val items = mat("items", keyed
-      .groupBy("key")
-      .agg(
-        min("clip_id").as("item_id"),
-        min_by(col("original"), col("clip_id")).as("original"),
-        count(lit(1)).as("n_members"))
-      .select("item_id", "key", "original", "n_members"))
-
-    val members = mat("members", keyed
-      .select("clip_id", "key")
-      .join(items.select("key", "item_id"), Seq("key"))
-      .select("clip_id", "item_id"))
-
-    val (postingsPlan, normsPlan) = gramProjections(items, conf)
-    val postings = mat("postings", postingsPlan)
-    val norms = mat("norms", normsPlan)
-
+    val rows = keyed(input, idCol, textCol)
+    val items = mat("items", itemsOf(rows))
+    val members = mat("members", membersOf(rows, items))
     val sigs = mat("sigs", signatures(items, conf))
-
-    // band tokens shuffle as 8-byte longs (mixed from the band's signature
-    // rows), not ~50-char strings: the LSH self-join shuffles |corpus| x
-    // bands rows, so key width dominates shuffle volume and sort-merge
-    // compare cost; a 64-bit collision can only ADD a candidate pair, which
-    // verification filters (same contract as the hash itself)
-    val bands = mat("bands", sigs
-      .select(col("item_id"), explode(col("band_hashes")).as("band_key")))
-
-    IndexTables(conf, items, members, postings, norms, sigs, bands, spreadParallelism)
+    tables(conf, items, members, sigs, spreadParallelism)
   }
 
-  /** Postings + norms as pure map-side projections of an `items` table
-    * (item_id, key, ...): one scan, both gram sizes, NO SHUFFLE — gram
-    * counts are local to each row (GramCountsExpr scaladoc; the naive
-    * explode+groupBy build would shuffle |corpus| x |grams| rows to
-    * recount what each row knows). Shared by the batch build above and
-    * the streaming state index (StreamDedup.stateIndex), so the two paths
-    * cannot drift.
+  /** Source rows as (clip_id, original, key): the string id, the raw text
+    * and its lowercased dedup key.
     */
-  def gramProjections(items: DataFrame, conf: FuzzyConf): (DataFrame, DataFrame) = {
+  def keyed(input: DataFrame, idCol: String, textCol: String): DataFrame = input
+    .select(col(idCol).cast("string").as("clip_id"), col(textCol).as("original"))
+    .withColumn("key", lower(col("original")))
+
+  /** One item per key of a [[keyed]] table: (item_id, key, original), the
+    * winner being the minimum clip_id (a distributed table has no row
+    * order; TableIO.upsert applies the same rule across batches).
+    */
+  def itemsOf(keyed: DataFrame): DataFrame = keyed
+    .groupBy("key")
+    .agg(min("clip_id").as("item_id"), min_by(col("original"), col("clip_id")).as("original"))
+    .select("item_id", "key", "original")
+
+  /** (clip_id, item_id): each [[keyed]] row mapped to the item that owns
+    * its key in `items`.
+    */
+  def membersOf(keyed: DataFrame, items: DataFrame): DataFrame = keyed
+    .select("clip_id", "key")
+    .join(items.select("key", "item_id"), Seq("key"))
+    .select("clip_id", "item_id")
+
+  /** The index over stored items/members/sigs tables. The batch build
+    * above and the streaming state view (StreamDedup.stateIndex) both
+    * assemble through here, so their postings cannot drift.
+    *
+    * Postings + norms are pure map-side projections of `items` (item_id,
+    * key, ...): one scan, both gram sizes, NO SHUFFLE — gram counts are
+    * local to each row (GramCountsExpr scaladoc; the naive explode+groupBy
+    * build would shuffle |corpus| x |grams| rows to recount what each row
+    * knows).
+    */
+  def tables(
+      conf: FuzzyConf,
+      items: DataFrame,
+      members: DataFrame,
+      sigs: DataFrame,
+      spreadParallelism: Int = 0): IndexTables = {
     val sized = items
       .select(
         col("item_id"),
@@ -126,7 +133,7 @@ object IndexBuild {
     }
     val norms = sized
       .select(col("item_id"), col("gram_size"), magUdf(col("gc.cnt")).as("magnitude"))
-    (postings, norms)
+    IndexTables(conf, items, members, postings, norms, sigs, spreadParallelism)
   }
 
   /** MinHash signature + SimHash + LSH band tokens of an `items` table via

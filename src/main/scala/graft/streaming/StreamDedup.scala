@@ -49,29 +49,24 @@ import org.apache.spark.storage.StorageLevel
   */
 object StreamDedup {
 
-  /** Whether a state path exists at all. State reads below tolerate two
-    * distinct "no data yet" shapes: an ABSENT dir (nothing ever written)
-    * and a fileless dir (dynamic overwrite of an empty frame leaves only
-    * _SUCCESS). The second still needs the AnalysisException catch, but
-    * short-circuiting the first here keeps Spark's analyzer from logging
-    * a full FileNotFoundException WARN stack trace on every stream's
-    * first batch — alarming noise in otherwise-clean driver logs.
-    */
-  private def pathExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** The one "no data yet" contract for every state read in this file:
-    * an ABSENT dir and a fileless dir (dynamic overwrite of an empty frame
-    * leaves only _SUCCESS) both mean `fallback`; anything else is
-    * `project` over the parquet read.
+    * an ABSENT dir and a dir holding no data entry (dynamic overwrite of
+    * an empty frame leaves only _SUCCESS) both mean `fallback`; anything
+    * else is `project` over the parquet read, and its read errors
+    * propagate. Checked by listing, not by catching the read's
+    * AnalysisException: Spark logs that failure as a full ERROR stack
+    * trace even when it is caught.
     */
   private def readState(spark: SparkSession, dir: String)(
-      project: DataFrame => DataFrame)(fallback: => DataFrame): DataFrame =
-    if (!pathExists(spark, dir)) fallback
-    else try project(spark.read.parquet(dir))
-    catch { case _: org.apache.spark.sql.AnalysisException => fallback }
+      project: DataFrame => DataFrame)(fallback: => DataFrame): DataFrame = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasData = fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    if (hasData) project(spark.read.parquet(dir)) else fallback
+  }
 
   /** Highest batch id ever committed into `stateDir`, from the `_last_batch`
     * marker [[processBatch]] writes (atomically) after each edges commit;
@@ -175,20 +170,14 @@ object StreamDedup {
     // materialization); without a checkpoint each would re-read the
     // batch's offset range from the streaming source — 4-5x source I/O
     // and decode per batch on the hot path
-    val keyed = scratch.checkpoint(batch
-      .select(col(idCol).cast("string").as("clip_id"), col(textCol).as("original"))
-      .withColumn("key", lower(col("original"))),
+    val keyed = scratch.checkpoint(IndexBuild.keyed(batch, idCol, textCol),
       eager = false, StorageLevel.MEMORY_AND_DISK_SER)
 
-    // the batch's per-key winner, deterministically (a distributed batch
-    // has no row order — same rule as IndexBuild/TableIO.upsert)
+    // the batch's per-key winner, by the batch index build's own rule
     def label(l: String): Unit =
       spark.sparkContext.setJobDescription(s"stream b$batchId: $l")
     label("items upsert")
-    val batchItems = keyed
-      .groupBy("key")
-      .agg(min("clip_id").as("item_id"), min_by(col("original"), col("clip_id")).as("original"))
-      .select("item_id", "key", "original")
+    val batchItems = IndexBuild.itemsOf(keyed)
     TableIO.upsert(spark, s"$stateDir/items", batchItems, "key")
     val items = spark.read.parquet(s"$stateDir/items")
 
@@ -198,10 +187,7 @@ object StreamDedup {
     // below consume it — materializing before the side thread starts
     // keeps the two consumers on blocks instead of racing to compute the
     // same lazy checkpoint
-    val batchMembers = scratch.checkpoint(keyed
-      .select("clip_id", "key")
-      .join(items.select("key", "item_id"), Seq("key"))
-      .select("clip_id", "item_id"),
+    val batchMembers = scratch.checkpoint(IndexBuild.membersOf(keyed, items),
       eager = true, StorageLevel.MEMORY_AND_DISK_SER)
     sideThread = new Thread(
       () =>
@@ -280,15 +266,9 @@ object StreamDedup {
     // localCheckpoints gated pairs + pruned postings internally, and the
     // default noop scratch would pin those blocks forever — one leaked
     // candidate+postings-sized block set per micro-batch.
-    // LEAN index view: verification reads items (item_id, key) + sigs (lev
-    // mode) or the postings/norms projections of items (cosine mode) —
-    // never n_members — so the public stateIndex's members-wide
-    // aggregation join would re-scan the WHOLE members state every
-    // micro-batch just to build a column the verifier drops: O(|state|)
-    // per batch for nothing at 10^12 rows
     label("verify+edges write")
     val fuzzy = FindStage.verifyPairs(
-      pairs, stateIndexLean(spark, stateDir, conf), conf.minScore, scratch)
+      pairs, stateIndex(spark, stateDir, conf), conf.minScore, scratch)
 
     // exact edges: only for clips whose edge is not already committed by an
     // EARLIER batch. Under at-least-once delivery a loser clip can be
@@ -301,18 +281,13 @@ object StreamDedup {
     // regenerates its own partition. dropDuplicates: a micro-batch that
     // carries the same clip row twice must not write the edge twice (the
     // owner is unique per clip, so duplicates are full-row identical).
-    val exactRaw = batchMembers
-      .filter(col("clip_id") =!= col("item_id"))
-      .select(col("item_id").as("a_id"), col("clip_id").as("b_id"))
-      .dropDuplicates("b_id")
+    val exactRaw = Candidates.exactEdges(batchMembers).dropDuplicates("b_id")
     val priorExact = readState(spark, s"$stateDir/edges")(
       _.filter(col("batch_id") =!= lit(batchId) && col("kind") === lit("exact"))
         .select("b_id"))(exactRaw.select("b_id").limit(0))
     val exact = exactRaw
       .join(priorExact, Seq("b_id"), "left_anti")
-      .select(
-        col("a_id"), col("b_id"),
-        lit("exact").as("kind"), lit(1.0).as("score"))
+      .select("a_id", "b_id", "kind", "score")
 
     exact.unionByName(fuzzy)
       .withColumn("batch_id", lit(batchId))
@@ -332,42 +307,19 @@ object StreamDedup {
     spark.sparkContext.setJobDescription(null)
   }
 
-  /** [[stateIndex]] minus the n_members aggregation: the per-batch
-    * verification path reads items only as (item_id, key) — plus the
-    * postings/norms projections OF those columns in cosine mode — so
-    * joining the full members state per micro-batch to build n_members
-    * would add an O(|state|) scan per batch for a column verifyPairs never
-    * reads. items here carries NO n_members column; callers that need it
-    * use the public [[stateIndex]].
-    */
-  private[graft] def stateIndexLean(
-      spark: SparkSession, stateDir: String, conf: FuzzyConf): IndexTables = {
-    val items = spark.read.parquet(s"$stateDir/items")
-    val sigs = spark.read.parquet(s"$stateDir/sigs")
-    val (postings, norms) = IndexBuild.gramProjections(items, conf)
-    IndexTables(conf, items, spark.read.parquet(s"$stateDir/members"), postings, norms, sigs,
-      sigs.select(col("item_id"), explode(col("band_hashes")).as("band_key")))
-  }
-
   /** The state tables as the batch kernel's IndexTables view, so
-    * verification runs the EXACT batch code path. postings/norms/bands are
-    * the same recompute-on-read projections the batch pipeline uses
-    * (FuzzyPipeline.mapSideStages) — and verifyPairs semi-join-prunes
-    * postings to candidate endpoints before the scan, so the cosine-mode
-    * projections never materialize corpus-wide here either (lev mode, the
-    * default, reads only items + sigs).
+    * verification runs the EXACT batch code path: assembled by
+    * IndexBuild.tables, with postings/norms the same recompute-on-read
+    * projections of items the batch pipeline uses — and verifyPairs
+    * semi-join-prunes postings to candidate endpoints before the scan, so
+    * the cosine-mode projections never materialize corpus-wide here
+    * either (lev mode, the default, reads only items + sigs).
     */
-  def stateIndex(spark: SparkSession, stateDir: String, conf: FuzzyConf): IndexTables = {
-    val items = spark.read.parquet(s"$stateDir/items")
-    val members = spark.read.parquet(s"$stateDir/members")
-    val sigs = spark.read.parquet(s"$stateDir/sigs")
-    val (postings, norms) = IndexBuild.gramProjections(items, conf)
-    val itemsN = items.join(
-      members.groupBy("item_id").agg(count(lit(1)).as("n_members")),
-      Seq("item_id"))
-    IndexTables(conf, itemsN, members, postings, norms, sigs,
-      sigs.select(col("item_id"), explode(col("band_hashes")).as("band_key")))
-  }
+  def stateIndex(spark: SparkSession, stateDir: String, conf: FuzzyConf): IndexTables =
+    IndexBuild.tables(conf,
+      spark.read.parquet(s"$stateDir/items"),
+      spark.read.parquet(s"$stateDir/members"),
+      spark.read.parquet(s"$stateDir/sigs"))
 
   /** All verified edges accumulated so far: (a_id, b_id, kind, score).
     * A duplicate-free stream writes no parquet files at all (dynamic

@@ -272,6 +272,10 @@ class FuzzyPipelineSpec extends AnyFunSuite with Matchers {
     val p1 = FuzzyPipeline(spark, corpusDF(corpus), "clip_id", "transcript",
       FuzzyConf(), Some(dir))
     val r1 = p1.clusters().as[(String, String)].collect().sorted
+    // the checkpoint dir holds the stored tables only: postings/norms are
+    // projections of items, never written
+    new java.io.File(dir).list().toSet shouldBe
+      Set("items", "members", "sigs", "candidates", "edges", "clusters")
     // resume: new pipeline object, same dir — must not recompute (mtimes fixed)
     val meta = java.nio.file.Paths.get(dir, "items", "_graft_meta.json")
     val clustersMeta = java.nio.file.Paths.get(dir, "clusters", "_graft_meta.json")
@@ -290,11 +294,28 @@ class FuzzyPipelineSpec extends AnyFunSuite with Matchers {
     // resume of clusters() must never have initialized the candidate memo
     // (the fuzzy branch's entry point)
     p2.candidatesCache shouldBe null
+    // the resumed index (items read back from parquet, postings/norms
+    // projected from it) answers queries as a local-mode pipeline does
+    val probes = probesDF(Seq("alpha beta gama", "other thing", "zzz"))
+    def found(p: FuzzyPipeline) = p.find(probes).as[(String, Double, String, Int)].collect().toSet
+    found(p2) shouldBe found(pipeline(corpus))
     // config change invalidates
     val p3 = FuzzyPipeline(spark, corpusDF(corpus), "clip_id", "transcript",
       FuzzyConf(gramHi = 4), Some(dir))
     p3.size shouldBe 3
     java.nio.file.Files.getLastModifiedTime(meta) should not be mtime1
+  }
+
+  test("concurrently awaits every branch before rethrowing a branch failure") {
+    val p = pipeline(Seq("alpha"))
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val err = intercept[java.util.concurrent.ExecutionException] {
+      p.concurrently(
+        () => throw new IllegalStateException("branch 0 failed"),
+        () => { Thread.sleep(1000); siblingDone.set(true); spark.emptyDataFrame })
+    }
+    err.getCause.getMessage shouldBe "branch 0 failed"
+    siblingDone.get() shouldBe true
   }
 
   test("stageMetrics surfaces per-stage, per-file lineage from the sidecars") {

@@ -18,11 +18,15 @@ object CandidateRefs {
       keyed.select(col("bkey"), lit(0).as("ktype"), col("item_id"), lit(0L).as("sh")),
       cap, saltChunk, maxSalted, maxHamming = 0)
 
-  /** Unordered candidate pairs (a_id < b_id) from LSH band collisions. */
-  def lshPairs(bands: DataFrame, maxBandBucket: Int, saltChunk: Int, maxSaltedBucket: Int): DataFrame =
-    bucketSelfPairs(
-      bands.select(col("band_key").as("bkey"), col("item_id")),
-      maxBandBucket, saltChunk, maxSaltedBucket)
+  /** One (bkey, item_id) row per LSH band token of a sigs table. */
+  def bandRows(sigs: DataFrame): DataFrame =
+    sigs.select(explode(col("band_hashes")).as("bkey"), col("item_id"))
+
+  /** Unordered candidate pairs (a_id < b_id) from LSH band collisions of a
+    * sigs table.
+    */
+  def lshPairs(sigs: DataFrame, maxBandBucket: Int, saltChunk: Int, maxSaltedBucket: Int): DataFrame =
+    bucketSelfPairs(bandRows(sigs), maxBandBucket, saltChunk, maxSaltedBucket)
 
   /** Unordered candidate pairs from SimHash chunk collisions at hamming
     * distance <= maxHamming; chunk key c is the c-th 15-bit slice of the

@@ -63,7 +63,7 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
       .fusedPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
       .as[(String, String)].collect().toSet
     val separate =
-      CandidateRefs.lshPairs(idx.bands, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
+      CandidateRefs.lshPairs(sigs, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
         .as[(String, String)].collect().toSet ++
         CandidateRefs.simhashPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
           .as[(String, String)].collect().toSet

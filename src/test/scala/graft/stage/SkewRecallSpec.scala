@@ -43,8 +43,8 @@ class SkewRecallSpec extends AnyFunSuite with Matchers {
     // the fixture genuinely exercises the star regime: at least one LSH
     // band bucket must exceed maxSaltedBucket
     import org.apache.spark.sql.functions.{count => fcount, max => fmax}
-    val maxBucket = p.index.bands
-      .groupBy("band_key").agg(fcount(org.apache.spark.sql.functions.lit(1)).as("n"))
+    val maxBucket = CandidateRefs.bandRows(p.index.sigs)
+      .groupBy("bkey").agg(fcount(org.apache.spark.sql.functions.lit(1)).as("n"))
       .agg(fmax("n")).as[Long].head()
     maxBucket should be > conf.maxSaltedBucket.toLong
 
