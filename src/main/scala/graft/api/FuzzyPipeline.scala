@@ -234,9 +234,7 @@ final case class FuzzyPipeline(
           // sigs checkpoint as part of its own stage, and later consumers
           // (the pair join, verifyPairs) then read blocks
           candidatesCache = ckpt("candidates")(
-            Candidates.fusedPairs(
-              idx.sigs, maxHamming = 3, conf.maxBandBucket, conf.saltChunk,
-              conf.maxSaltedBucket, scratch))
+            Candidates.fusedPairs(idx.sigs, conf, scratch))
         }
         candidatesCache
       }

@@ -13,6 +13,10 @@ package graft.conf
   * skew handling) that the single-node reference does not need: its
   * inverted index (`Internal.hs:51`) is a degenerate LSH with band = one
   * gram, which stops scaling once postings lists grow with corpus size.
+  * The skew-regime fields (maxBandBucket, saltChunk, maxSaltedBucket)
+  * govern the one bucket-pair kernel (Candidates.taggedSelfPairs) on both
+  * paths: the batch pipeline, where every key of a bucket is a probe, and
+  * each streaming micro-batch, whose own keys probe the earlier key state.
   *
   * @param gramLo         inclusive lower bound of gram sizes
   * @param gramHi         inclusive upper bound of gram sizes
@@ -38,23 +42,24 @@ package graft.conf
   *                       0.05 (CHANGES.md). Token-drop/append dups at
   *                       lower j are covered by the exact-substring pass,
   *                       byte-identical ones by the exact pass
-  * @param maxBandBucket  rows sharing one LSH band value before the bucket
-  *                       is declared HOT: hot buckets switch from the
-  *                       direct in-bucket self-join to SALTED pair
-  *                       generation (north rule: "salted repartitioning
-  *                       for skewed shingle bands") — per-task work stays
-  *                       bounded by saltChunk x bucket instead of bucket^2
-  *                       in a single task
-  * @param saltChunk      target members per salt chunk inside a hot bucket
-  * @param maxSaltedBucket buckets beyond even the salted regime switch to
-  *                       STAR candidates (member -> bucket-min, linear in
-  *                       bucket size): all-pairs volume is quadratic no
-  *                       matter the partitioning, but a genuine
-  *                       near-identical flood is a real duplicate cluster,
-  *                       and its spanning star is all that connected
-  *                       components needs; degenerate near-constant bands
-  *                       are pruned by verification at |bucket| cost
-  *                       (Candidates.taggedSelfPairs scaladoc)
+  * @param maxBandBucket  probe rows sharing one bucket (LSH band value or
+  *                       SimHash chunk) before the bucket is declared HOT:
+  *                       hot buckets switch from the direct in-bucket join
+  *                       to SALTED pair generation (north rule: "salted
+  *                       repartitioning for skewed shingle bands") —
+  *                       per-task work stays bounded by saltChunk x bucket
+  *                       instead of probes x bucket in a single task
+  * @param saltChunk      target probes per salt chunk inside a hot bucket
+  * @param maxSaltedBucket buckets of more members than this (probes or
+  *                       not) switch to STAR candidates (probe ->
+  *                       bucket-min, linear in bucket size): all-pairs
+  *                       volume is quadratic no matter the partitioning,
+  *                       but a genuine near-identical flood is a real
+  *                       duplicate cluster, and its spanning star is all
+  *                       that connected components needs; degenerate
+  *                       near-constant bands are pruned by verification
+  *                       at |bucket| cost (Candidates.taggedSelfPairs
+  *                       scaladoc)
   * @param maxPostingsPerGram stop-list threshold: grams whose document
   *                       frequency exceeds this are dropped from the
   *                       candidate join (they only add quadratic pairs);

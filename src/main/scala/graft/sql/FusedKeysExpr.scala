@@ -46,6 +46,15 @@ case class FusedKeysExpr(left: Expression, right: Expression) extends BinaryExpr
 }
 
 object FusedKeysExpr {
+  /** 15-bit SimHash chunk keys per fingerprint. */
+  val Chunks = 4
+
+  /** Largest fingerprint hamming distance the chunk keys are guaranteed to
+    * find (pigeonhole: <= Chunks - 1 differing bits leave at least one
+    * chunk identical) — the candidate kernel's SimHash gate.
+    */
+  val MaxHamming: Int = Chunks - 1
+
   val OutType: ArrayType = ArrayType(
     StructType(Seq(
       StructField("bkey", LongType, nullable = false),
@@ -55,7 +64,7 @@ object FusedKeysExpr {
   /** Static entry point shared by interpreted eval and generated code. */
   def compute(bands: ArrayData, simhash: Long): ArrayData = {
     val nb = bands.numElements()
-    val out = new Array[Any](nb + 4)
+    val out = new Array[Any](nb + Chunks)
     var i = 0
     while (i < nb) {
       val row = new GenericInternalRow(2)
@@ -65,7 +74,7 @@ object FusedKeysExpr {
       i += 1
     }
     var c = 0
-    while (c < 4) {
+    while (c < Chunks) {
       val row = new GenericInternalRow(2)
       row.setLong(0, ((simhash >>> (15 * c)) & 0x7fffL) + (c.toLong << 15))
       row.setInt(1, 1)

@@ -1,6 +1,8 @@
 package graft.stage
 
-import org.apache.spark.sql.DataFrame
+import graft.conf.FuzzyConf
+import graft.sql.FusedKeysExpr
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -11,13 +13,22 @@ import org.apache.spark.storage.StorageLevel
   * Three passes, all equi-joins (shuffle-hash/sort-merge under AQE):
   *  - exact: star edges inside identical-key groups — O(group) not
   *    O(group^2), since connected components only needs a spanning star
-  *  - MinHash/LSH: self-join on band keys; three skew regimes by bucket
-  *    size — direct, salted all-pairs, and STAR (member -> bucket-min,
-  *    linear) for flood-sized buckets, so worst-case pair fanout stays
-  *    bounded without losing genuine near-identical floods
+  *  - MinHash/LSH: self-join on band keys; three skew regimes — direct,
+  *    salted all-pairs, and STAR (probe -> bucket-min, linear) for
+  *    flood-sized buckets, so worst-case pair fanout stays bounded without
+  *    losing genuine near-identical floods
   *  - SimHash: self-join on 15-bit fingerprint chunks (4 chunks of the
   *    60-bit fingerprint => any pair within hamming distance 3 shares at
-  *    least one exact chunk), verified by bit_count(xor) <= maxHamming
+  *    least one exact chunk), verified by bit_count(xor) <=
+  *    FusedKeysExpr.MaxHamming
+  *
+  * The last two run fused through ONE bucket-pair kernel,
+  * [[taggedSelfPairs]]: every pair sharing a bucket with at least one
+  * PROBE endpoint. The batch ([[fusedPairs]]) makes every key a probe; the
+  * stream ([[incrementalPairsFromKeys]]) makes its micro-batch's keys the
+  * probes of the earlier key state — the streaming join as the batch join
+  * probed by the new records only. Star by bucket size n, then direct or
+  * salted by probe count p; p = n for the batch.
   */
 object Candidates {
 
@@ -35,55 +46,66 @@ object Candidates {
         lit("exact").as("kind"),
         lit(1.0).as("score"))
 
-  /** All unordered (a_id < b_id) pairs of item_ids sharing a bucket key,
-    * over a mixed key space: `keyed` has columns (bkey, ktype, item_id,
-    * sh). Three skew regimes by bucket size m (north rule: "salted
-    * repartitioning for skewed shingle bands"):
+  /** Every unordered (a_id < b_id) pair of item_ids that shares a bucket
+    * and has at least one PROBE endpoint — the one bucket-pair kernel of
+    * both paths. `keyed` has columns (bkey, ktype, item_id, sh, probe): the
+    * batch ([[fusedPairs]]) marks every row a probe, the stream
+    * ([[incrementalPairsFromKeys]]) marks its micro-batch's keys probes and
+    * the earlier key state non-probes. Three skew regimes per bucket of n
+    * members, p of them probes (north rule: "salted repartitioning for
+    * skewed shingle bands"):
     *
-    *  - m <= cap: direct in-bucket self-join — at most ~cap^2 candidate
-    *    rows per bucket, fine inside one task;
-    *  - cap < m <= maxSalted: SALTED all-pairs — members split into
-    *    ceil(m/saltChunk) chunks by an id hash; the A side keeps its home
-    *    chunk, the B side is replicated to EVERY chunk, and the join key
-    *    becomes (bkey, chunk). Every unordered pair is still produced
-    *    exactly once (ordered pair (a,b) materializes only in a's home
-    *    chunk; a < b filter halves), but per-task work is bounded by
-    *    saltChunk x m instead of m^2 serializing in one task;
-    *  - m > maxSalted: STAR — each member pairs with the bucket minimum
-    *    only (see FuzzyConf.maxSaltedBucket and below).
+    *  - n > maxSaltedBucket: STAR — each probe pairs with the bucket
+    *    minimum only, and a probe that IS the minimum pairs with the
+    *    minimum of the non-probe rows (the old hub; see below);
+    *  - p <= maxBandBucket: direct in-bucket join of the probes against
+    *    every member — at most ~p x n candidate rows per bucket, fine
+    *    inside one task;
+    *  - otherwise SALTED — the probes split into ceil(p/saltChunk) chunks
+    *    by an id hash; the A (probe) side keeps its home chunk, the B side
+    *    (every member) is replicated to EVERY chunk, and the join key
+    *    becomes (bkey, chunk). An unordered pair materializes only in its
+    *    probe endpoint's home chunk (in the smaller id's when both are
+    *    probes), so per-task work is bounded by saltChunk x n instead of
+    *    p x n serializing in one task.
+    *
+    * For the batch p = n, so regimes and chunks follow bucket size alone.
+    * For the stream a micro-batch bringing more than maxBandBucket members
+    * into one bucket is salted too — batch 0 of a stream is all probes.
     *
     * Rows with ktype = 1 are SimHash chunk keys carrying the full
     * fingerprint in `sh`; pairs from those buckets are kept only at
-    * hamming(a_sh, b_sh) <= maxHamming, and the filter runs BEFORE the pair
-    * distinct. That placement is the scale lever: at corpus size n the raw
-    * 15-bit-chunk collision volume is ~n^2/2^15 pairs (~8M rows at 400k
-    * items), and round 2 shuffled all of it through a distinct plus two
-    * signature re-joins before filtering — here the xor/bit_count runs
-    * inside the join stage and only survivors (plus LSH pairs) reach the
-    * distinct.
+    * hamming(a_sh, b_sh) <= [[FusedKeysExpr.MaxHamming]], and the filter
+    * runs BEFORE the pair distinct. That placement is the scale lever: at
+    * corpus size n the raw 15-bit-chunk collision volume is ~n^2/2^15
+    * pairs (~8M rows at 400k items), and round 2 shuffled all of it
+    * through a distinct plus two signature re-joins before filtering —
+    * here the xor/bit_count runs inside the join stage and only survivors
+    * (plus LSH pairs) reach the distinct.
     *
-    * Buckets beyond maxSalted enter the STAR regime (round 2 dropped
-    * them): each member pairs with the bucket minimum only — |bucket|
-    * candidates instead of |bucket|^2/2. A genuine near-identical flood IS
-    * a real duplicate cluster that produces exactly such buckets; the star
-    * is the spanning structure connected components needs, and
-    * verification prunes the two failure shapes cheaply: a DEGENERATE band
-    * (near-constant signature band over dissimilar items) yields star
-    * edges that fail the signature gate at |bucket| cost, and a
-    * chain-shaped flood whose far ends fail rep-verification still
-    * recovers through its other, independent band draws (only buckets
-    * > maxSalted go star).
+    * Buckets beyond maxSaltedBucket enter the STAR regime (round 2 dropped
+    * them): |bucket| candidates instead of |bucket|^2/2. A genuine
+    * near-identical flood IS a real duplicate cluster that produces
+    * exactly such buckets; the star is the spanning structure connected
+    * components needs, and verification prunes the two failure shapes
+    * cheaply: a DEGENERATE band (near-constant signature band over
+    * dissimilar items) yields star edges that fail the signature gate at
+    * |bucket| cost, and a chain-shaped flood whose far ends fail
+    * rep-verification still recovers through its other, independent band
+    * draws. Across stream batches the star needs one extra edge: a probe
+    * that BECOMES the bucket minimum gets no (member -> min) edge itself,
+    * and every earlier member's star hangs off the OLD hub — so it is
+    * linked to the old hub, keeping the bucket one component inductively.
+    * The batch has no non-probe rows, so no old hub.
     */
   private[stage] def taggedSelfPairs(
       keyed: DataFrame,
-      cap: Int,
-      saltChunk: Int,
-      maxSalted: Int,
-      maxHamming: Int,
+      conf: FuzzyConf,
       scratch: Scratch = Scratch.noop): DataFrame = {
+    val (cap, saltChunk, maxSalted) = (conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
     val sizes = scratch.checkpoint(keyed
       .groupBy("bkey", "ktype")
-      .agg(count(lit(1)).as("bucket_n"))
+      .agg(count(lit(1)).as("bucket_n"), count_if(col("probe")).as("probe_n"))
       .filter(col("bucket_n") > 1), eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     // six downstream branches (small a/b, hot A/B, flood x2) consume the
     // keyed-with-size table. When the non-singleton bucket directory is
@@ -94,10 +116,14 @@ object Candidates {
     // no shuffle for the size join. Beyond the limit, fall back to the
     // shuffle join materialized once (the 10^12-scale shape).
     // ONE stats job over the materialized directory blocks: row count
-    // (broadcast-vs-shuffle decision) and largest bucket (regime gating)
+    // (broadcast-vs-shuffle decision), largest bucket, largest probe count
+    // and non-probe member count (regime and branch gating)
     val dirStats = sizes
-      .agg(count(lit(1)).as("n"), coalesce(max("bucket_n"), lit(0L)).as("mx")).head()
-    val (dirRows, maxBucketN) = (dirStats.getLong(0), dirStats.getLong(1))
+      .agg(count(lit(1)), coalesce(max("bucket_n"), lit(0L)), coalesce(max("probe_n"), lit(0L)),
+        coalesce(sum(col("bucket_n") - col("probe_n")), lit(0L)))
+      .head()
+    val (dirRows, maxBucketN, maxProbeN) = (dirStats.getLong(0), dirStats.getLong(1), dirStats.getLong(2))
+    val allProbes = dirStats.getLong(3) == 0L
     val withN =
       if (dirRows <= bucketDirBroadcastLimit) {
         val joined = keyed.join(sizes.hint("broadcast"), Seq("bkey", "ktype"))
@@ -113,66 +139,79 @@ object Candidates {
       } else
         scratch.checkpoint(keyed.join(sizes, Seq("bkey", "ktype")),
           eager = false, StorageLevel.MEMORY_AND_DISK_SER)
-    val keep = (col("ktype") =!= 1) ||
-      bit_count(col("a_sh").bitwiseXOR(col("b_sh"))) <= maxHamming
+    def keep(aSh: Column, bSh: Column) =
+      (col("ktype") =!= 1) || bit_count(aSh.bitwiseXOR(bSh)) <= FusedKeysExpr.MaxHamming
+    def unordered(aId: Column, bId: Column) = Seq(least(aId, bId).as("a_id"), greatest(aId, bId).as("b_id"))
+    def bSide(df: DataFrame, extra: Column*) = df.select(Seq(col("bkey"), col("ktype")) ++ extra ++
+      Seq(col("item_id").as("b_id"), col("sh").as("b_sh"), col("probe").as("b_probe")): _*)
+    // probe A x member B: a probe-probe pair once (a < b), a probe-state
+    // pair once from its probe end. When the directory proves every member
+    // a probe (the batch), the probe filter and the state arm are no-ops
+    // and are left out: the direct join's two sides are then the same
+    // exchange, which AQE shuffles once. SHUFFLE_HASH, not sort-merge
+    // (guide §3.1): the probe side is the smaller build (bounded by `cap`
+    // per bucket directly, by saltChunk per chunk salted), and the two full
+    // sorts SMJ would pay on the widest tables of the stage buy nothing
+    def probesOf(df: DataFrame) = if (allProbes) df else df.filter(col("probe"))
+    val once =
+      if (allProbes) col("a_id") < col("b_id")
+      else col("a_id") < col("b_id") || (!col("b_probe") && col("a_id") =!= col("b_id"))
+    def probePairs(a: DataFrame, b: DataFrame, on: Seq[String]) = a
+      .hint("shuffle_hash")
+      .join(b, on)
+      .filter(once && keep(col("a_sh"), col("b_sh")))
+      .select(unordered(col("a_id"), col("b_id")): _*)
 
     // A run whose buckets never reach the hot/flood regimes would still
     // PLAN and EXECUTE those branches — two more passes over the keyed
     // explode, a salt explode, a bucket-min aggregation and their AQE
-    // stages — only to union empty frames. The maxBucketN gates below skip
-    // branches the directory PROVES empty; pair-set output is identical by
-    // construction (a skipped branch's filter matches zero rows).
-    val small = withN.filter(col("bucket_n") <= cap)
-    // SHUFFLE_HASH, not sort-merge (guide §3.1): the join keys are bucket
-    // ids whose groups are bounded by `cap`, so the per-partition build
-    // side is small and the two full sorts SMJ would pay on the widest
-    // tables of the stage buy nothing
-    val smallPairs = small
-      .select(col("bkey"), col("ktype"), col("item_id").as("a_id"), col("sh").as("a_sh"))
-      .hint("shuffle_hash")
-      .join(
-        small.select(col("bkey"), col("ktype"), col("item_id").as("b_id"), col("sh").as("b_sh")),
-        Seq("bkey", "ktype"))
-      .filter(col("a_id") < col("b_id") && keep)
-      .select("a_id", "b_id")
+    // stages — only to union empty frames. The maxProbeN / maxBucketN gates
+    // below skip branches the directory PROVES empty; pair-set output is
+    // identical by construction (a skipped branch's filter matches zero
+    // rows).
+    val unsalted = withN.filter(col("bucket_n") <= maxSalted)
+    val small = unsalted.filter(col("probe_n") <= cap)
+    val smallPairs = probePairs(
+      probesOf(small).select(col("bkey"), col("ktype"), col("item_id").as("a_id"), col("sh").as("a_sh")),
+      bSide(small), Seq("bkey", "ktype"))
 
-    val hot = withN
-      .filter(col("bucket_n") > cap && col("bucket_n") <= maxSalted)
-      .withColumn("n_chunks", ceil(col("bucket_n").cast("double") / saltChunk).cast("int"))
-    val hotA = hot.select(
-      col("bkey"),
-      col("ktype"),
-      pmod(xxhash64(col("item_id")), col("n_chunks").cast("long")).cast("int").as("chunk"),
-      col("item_id").as("a_id"),
-      col("sh").as("a_sh"))
-    val hotB = hot.select(
-      col("bkey"),
-      col("ktype"),
-      explode(sequence(lit(0), col("n_chunks") - 1)).as("chunk"),
-      col("item_id").as("b_id"),
-      col("sh").as("b_sh"))
-    val hotPairs = hotA
-      .hint("shuffle_hash") // home-chunk side is 1/n_chunks of the replicated side
-      .join(hotB, Seq("bkey", "ktype", "chunk"))
-      .filter(col("a_id") < col("b_id") && keep)
-      .select("a_id", "b_id")
+    val hot = unsalted
+      .filter(col("probe_n") > cap)
+      .withColumn("n_chunks", ceil(col("probe_n").cast("double") / saltChunk).cast("int"))
+    val hotPairs = probePairs(
+      probesOf(hot).select(
+        col("bkey"),
+        col("ktype"),
+        pmod(xxhash64(col("item_id")), col("n_chunks").cast("long")).cast("int").as("chunk"),
+        col("item_id").as("a_id"),
+        col("sh").as("a_sh")),
+      bSide(hot, explode(sequence(lit(0), col("n_chunks") - 1)).as("chunk")),
+      Seq("bkey", "ktype", "chunk"))
 
-    // star regime: member -> bucket-min edges, one per member
+    // star regime: probe -> bucket-min edges, one per probe; the probe that
+    // is the bucket min links to the old hub (min of the non-probe rows)
     val flood = withN.filter(col("bucket_n") > maxSalted)
+    val stateId = when(!col("probe"), col("item_id"))
     val floodMin = flood
       .groupBy("bkey", "ktype")
-      .agg(min("item_id").as("a_id"), min_by(col("sh"), col("item_id")).as("a_sh"))
+      .agg(min("item_id").as("m_id"), min_by(col("sh"), col("item_id")).as("m_sh"),
+        min(stateId).as("o_id"), min_by(col("sh"), stateId).as("o_sh"))
+    val isMin = col("item_id") === col("m_id")
     val floodPairs = flood
-      .select(col("bkey"), col("ktype"), col("item_id").as("b_id"), col("sh").as("b_sh"))
+      .filter(col("probe"))
+      .select(col("bkey"), col("ktype"), col("item_id"), col("sh"))
       .join(floodMin.hint("shuffle_hash"), Seq("bkey", "ktype")) // one row per flooded bucket
-      .filter(col("a_id") < col("b_id") && keep)
-      .select("a_id", "b_id")
+      .select(col("ktype"), col("item_id"), col("sh"),
+        when(isMin, col("o_id")).otherwise(col("m_id")).as("hub"),
+        when(isMin, col("o_sh")).otherwise(col("m_sh")).as("hub_sh"))
+      .filter(col("hub").isNotNull && keep(col("sh"), col("hub_sh")))
+      .select(unordered(col("item_id"), col("hub")): _*)
 
-    val unioned =
-      if (maxBucketN <= cap) smallPairs
-      else if (maxBucketN <= maxSalted) smallPairs.unionByName(hotPairs)
-      else smallPairs.unionByName(hotPairs).unionByName(floodPairs)
-    unioned.distinct()
+    (Seq(smallPairs) ++
+      (if (maxProbeN > cap) Seq(hotPairs) else Nil) ++
+      (if (maxBucketN > maxSalted) Seq(floodPairs) else Nil))
+      .reduce(_ unionByName _)
+      .distinct()
   }
 
   /** Above this many contained-side keys the sorted prefix-hash array can
@@ -465,16 +504,16 @@ object Candidates {
     }
 
   /** Unordered candidate pairs from LSH band collisions and SimHash chunk
-    * collisions at hamming distance <= maxHamming (pigeonhole over 4 x
-    * 15-bit chunks: <= 3 differing bits leave at least one chunk
-    * identical), fused into ONE keyed table -> one bucket-size
-    * aggregation, one materialization, one self-join, one distinct — half
-    * the candidate-generation stage chain of running the two passes
+    * collisions at hamming distance <= [[FusedKeysExpr.MaxHamming]], fused
+    * into ONE keyed table -> one bucket-size aggregation, one
+    * materialization, one self-join, one distinct — half the
+    * candidate-generation stage chain of running the two passes
     * separately. The serial length of that chain is what bounds single-box
     * (and per-executor) scaling; the work per stage is identical. Band keys
     * and chunk keys live in disjoint (bkey, ktype) spaces, so bucket
     * contents — and therefore the emitted pair set — match the separate
-    * passes exactly (CandidatesSpec pins the union equality).
+    * passes exactly (CandidatesSpec pins the union equality). Every key is
+    * a probe of [[taggedSelfPairs]].
     *
     * NOTE: pair generation local-checkpoints the bucket directory and the
     * pruned keyed-with-size table. With the default [[Scratch.noop]] those
@@ -483,15 +522,8 @@ object Candidates {
     * pass its own `scratch` and `release()` it once the returned pairs are
     * materialized (FuzzyPipeline does).
     */
-  def fusedPairs(
-      sigs: DataFrame,
-      maxHamming: Int,
-      maxBandBucket: Int,
-      saltChunk: Int = 64,
-      maxSaltedBucket: Int = 4096,
-      scratch: Scratch = Scratch.noop): DataFrame = {
-    taggedSelfPairs(fusedKeyed(sigs), maxBandBucket, saltChunk, maxSaltedBucket, maxHamming, scratch)
-  }
+  def fusedPairs(sigs: DataFrame, conf: FuzzyConf, scratch: Scratch = Scratch.noop): DataFrame =
+    taggedSelfPairs(fusedKeyed(sigs).withColumn("probe", lit(true)), conf, scratch)
 
   /** The fused (bkey, ktype, item_id, sh) key table of a sigs table — LSH
     * band tokens (ktype 0) + SimHash chunk keys (ktype 1) in one explode.
@@ -514,122 +546,39 @@ object Candidates {
 
   /** Candidate pairs touching the batch side, over fused-KEY tables
     * (bkey, ktype, item_id, sh): `newKeys` the arriving batch's keys,
-    * `allKeys` the accumulated key state INCLUDING the batch (key state is
-    * written before pair generation) — the incremental form of
-    * [[fusedPairs]] for streaming ingestion. New-vs-new pairs are produced
-    * too; the union over batches of these pair sets covers every pair
-    * [[fusedPairs]] would emit below the flood regime — a pair (a, b) is
-    * generated at the batch that added its later endpoint, when the
-    * earlier one is already in `allKeys` (CandidatesSpec pins set
+    * `stateKeys` the key state of EARLIER batches — the incremental form of
+    * [[fusedPairs]] for streaming ingestion: the same kernel
+    * ([[taggedSelfPairs]]) with the batch's keys as probes. New-vs-new pairs
+    * are produced too; below the star regime the union over batches of
+    * these pair sets is exactly what [[fusedPairs]] emits — a pair (a, b)
+    * is generated at the batch that added its later endpoint, when the
+    * earlier one is already in `stateKeys` (CandidatesSpec pins set
     * equality).
     *
-    * Cost: ONE pass over the accumulated key state, semi-join-pruned to
-    * the buckets this batch touches, then all shuffles are O(batch x
-    * bucket) — never a corpus-wide explode or corpus-wide aggregation.
-    * The pruning scan itself is O(|state|) IO per batch in the parquet
-    * sandbox; on the Iceberg seam the key table is bucket-partitioned and
-    * the same semi-join prunes at the metadata level. The pruned
-    * membership is localCheckpointed (two consumers: the bucket directory
-    * and the direct join) and `scratch`-tracked for release once the
-    * caller materializes the pairs: a long-lived driver calling this per
+    * Cost: ONE pass over the key state, semi-join-pruned to the buckets
+    * this batch touches, then all shuffles are O(batch x bucket) — never a
+    * corpus-wide explode or corpus-wide aggregation. The pruning scan
+    * itself is O(|state|) IO per batch in the parquet sandbox; on the
+    * Iceberg seam the key table is bucket-partitioned and the same
+    * semi-join prunes at the metadata level. The pruned, probe-tagged keys
+    * are localCheckpointed (two consumers: the kernel's bucket directory
+    * and its size join) and `scratch`-tracked for release once the caller
+    * materializes the pairs: a long-lived driver calling this per
     * micro-batch with the default [[Scratch.noop]] would grow its pinned
     * blocks by one pruned-state-sized set per batch (StreamDedup
     * .processBatch passes and releases its own).
-    *
-    * Skew: the probe side is per-member, so fanout is LINEAR in bucket
-    * size (the self-join's quadratic salted middle regime has no
-    * equivalent here). Buckets <= maxBucket join directly (<= maxBucket
-    * partners per probe row); beyond that the probe pairs with the bucket
-    * MINIMUM only — the same STAR spanning structure the batch flood
-    * regime emits. Cross-batch star connectivity needs one extra edge: a
-    * batch arrival that BECOMES the bucket minimum gets no (member -> min)
-    * edge itself, and every earlier member's star hangs off the OLD hub —
-    * so the new minimum is linked to the pre-batch minimum (the old hub),
-    * keeping the bucket one component inductively across batches.
     */
   def incrementalPairsFromKeys(
       newKeys: DataFrame,
-      allKeys: DataFrame,
-      maxHamming: Int,
-      maxBucket: Int,
+      stateKeys: DataFrame,
+      conf: FuzzyConf,
       scratch: Scratch = Scratch.noop): DataFrame = {
+    val cols = Seq("bkey", "ktype", "item_id", "sh").map(col)
     val touched = newKeys.select("bkey", "ktype").distinct()
-    val pruned = scratch.checkpoint(allKeys.join(touched, Seq("bkey", "ktype"), "left_semi"),
+    val keyed = scratch.checkpoint(
+      stateKeys.join(touched, Seq("bkey", "ktype"), "left_semi").select(cols :+ lit(false).as("probe"): _*)
+        .unionByName(newKeys.select(cols :+ lit(true).as("probe"): _*)),
       eager = false, StorageLevel.MEMORY_AND_DISK_SER)
-    // bucket directory MATERIALIZED (scratch-released like pruned) so one
-    // tiny stats job can read the largest bucket: when no touched bucket
-    // exceeds maxBucket — the common case outside flood regimes — the
-    // star/patch branches and even the probe-side size join are provably
-    // no-ops, and skipping them removes a third of the per-micro-batch AQE
-    // stage chain (the streaming path runs this once per batch)
-    val sizes = scratch.checkpoint(pruned
-      .groupBy("bkey", "ktype")
-      .agg(
-        count(lit(1)).as("bucket_n"),
-        min("item_id").as("min_id"),
-        min_by(col("sh"), col("item_id")).as("min_sh")),
-      eager = false, StorageLevel.MEMORY_AND_DISK_SER)
-    val maxBucketN = sizes.agg(coalesce(max("bucket_n"), lit(0L))).head().getLong(0)
-    // hamming gate (symmetric) runs inside each branch, before the distinct
-    def keep(aSh: org.apache.spark.sql.Column, bSh: org.apache.spark.sql.Column) =
-      (col("ktype") =!= 1) || bit_count(aSh.bitwiseXOR(bSh)) <= maxHamming
-
-    if (maxBucketN <= maxBucket) {
-      // every bucket is below the cap: the size join adds nothing (inner
-      // join with a complete directory, filter passes every row) and
-      // star/patch match zero rows — identical pair set, straight join
-      return newKeys
-        .select(col("bkey"), col("ktype"), col("item_id").as("x_id"), col("sh").as("x_sh"))
-        .hint("shuffle_hash") // probe keys are the batch side — the smaller build
-        .join(
-          pruned.select(col("bkey"), col("ktype"), col("item_id").as("y_id"), col("sh").as("y_sh")),
-          Seq("bkey", "ktype"))
-        .filter(col("x_id") =!= col("y_id") && keep(col("x_sh"), col("y_sh")))
-        .select(
-          least(col("x_id"), col("y_id")).as("a_id"),
-          greatest(col("x_id"), col("y_id")).as("b_id"))
-        .distinct()
-    }
-
-    val withN = newKeys.join(sizes, Seq("bkey", "ktype")) // inner: every probe key has >= itself
-
-    val direct = withN
-      .filter(col("bucket_n") <= maxBucket)
-      .select(col("bkey"), col("ktype"), col("item_id").as("x_id"), col("sh").as("x_sh"))
-      .hint("shuffle_hash")
-      .join(
-        pruned.select(col("bkey"), col("ktype"), col("item_id").as("y_id"), col("sh").as("y_sh")),
-        Seq("bkey", "ktype"))
-      .filter(col("x_id") =!= col("y_id") && keep(col("x_sh"), col("y_sh")))
-      .select(
-        least(col("x_id"), col("y_id")).as("a_id"),
-        greatest(col("x_id"), col("y_id")).as("b_id"))
-
-    val star = withN
-      .filter(
-        col("bucket_n") > maxBucket && col("item_id") =!= col("min_id") &&
-          keep(col("sh"), col("min_sh")))
-      .select(
-        least(col("item_id"), col("min_id")).as("a_id"),
-        greatest(col("item_id"), col("min_id")).as("b_id"))
-
-    // the old-hub patch edge: pre-batch minimum per flooded bucket (batch
-    // members anti-joined away), paired with a batch arrival that is the
-    // new bucket minimum. Empty when the bucket min is an old member (the
-    // common case) or the bucket is entirely new (the star alone spans it).
-    val oldMin = pruned
-      .join(newKeys.select("bkey", "ktype", "item_id"),
-        Seq("bkey", "ktype", "item_id"), "left_anti")
-      .groupBy("bkey", "ktype")
-      .agg(min("item_id").as("o_id"), min_by(col("sh"), col("item_id")).as("o_sh"))
-    val patch = withN
-      .filter(col("bucket_n") > maxBucket && col("item_id") === col("min_id"))
-      .join(oldMin, Seq("bkey", "ktype"))
-      .filter(keep(col("sh"), col("o_sh")))
-      .select(
-        least(col("item_id"), col("o_id")).as("a_id"),
-        greatest(col("item_id"), col("o_id")).as("b_id"))
-
-    direct.unionByName(star).unionByName(patch).distinct()
+    taggedSelfPairs(keyed, conf, scratch)
   }
 }

@@ -96,8 +96,9 @@ object IndexBuild {
     .select("clip_id", "item_id")
 
   /** The index over stored items/members/sigs tables. The batch build
-    * above and the streaming state view (StreamDedup.stateIndex) both
-    * assemble through here, so their postings cannot drift.
+    * above and the streaming state views (StreamDedup.stateIndex and
+    * verifyIndex) all assemble through here, so their postings cannot
+    * drift.
     *
     * Postings + norms are pure map-side projections of `items` (item_id,
     * key, ...): one scan, both gram sizes, NO SHUFFLE — gram counts are

@@ -24,11 +24,12 @@ import org.apache.spark.storage.StorageLevel
   *    (IndexBuild.signatures — the same fused native kernel as batch),
   *    the new items' fused keys land in a `keys` state table (partitioned
   *    by batch_id, replay-idempotent), and candidates come from those keys
-  *    probing the accumulated key state pruned to the batch's buckets
+  *    probing the earlier key state pruned to the batch's buckets, through
+  *    the batch's own bucket-pair kernel and skew regimes
   *    (Candidates.incrementalPairsFromKeys — per-batch shuffle is
   *    O(batch x bucket), plus one semi-join-pruned scan of the key state);
   *  - candidate pairs are verified by the batch kernel
-  *    (FindStage.verifyPairs over a state-backed IndexTables view), so
+  *    (FindStage.verifyPairs over a view of the items and sigs state), so
   *    streaming and batch scores cannot drift;
   *  - verified edges land partitioned by batch_id with dynamic partition
   *    overwrite — a retried micro-batch REPLACES its own partition, making
@@ -233,8 +234,8 @@ object StreamDedup {
     // (dynamic overwrite — a replay rewrites identical rows), so candidate
     // generation reads accumulated 8-byte keys back instead of re-exploding
     // every signature in state on every batch; incrementalPairsFromKeys
-    // then prunes that state to the batch's buckets in one semi-join scan
-    // checkpointed: consumed by the keys write AND by candidate generation
+    // then prunes that state to the batch's buckets in one semi-join scan.
+    // Checkpointed: consumed by the keys write AND by candidate generation
     // below — without it the whole newSigs derivation (state reads + the
     // signature kernel) re-runs for each
     val newKeys = scratch.checkpoint(Candidates.fusedKeyed(newSigs),
@@ -246,29 +247,26 @@ object StreamDedup {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(s"$stateDir/keys")
-    // accumulated key state = EARLIER batches' partitions (from parquet;
-    // the current batch's partition is excluded — after the dynamic
-    // overwrite above its content is exactly newKeys) + the batch's own
-    // keys straight from their just-materialized blocks, so the state scan
-    // never re-reads what this batch just wrote. A keys dir can be absent
-    // only while state holds zero items — same fileless-read contract as
-    // edges()
-    val allKeys = readState(spark, s"$stateDir/keys")(
+    // the key state the batch probes = EARLIER batches' partitions (the
+    // current batch's partition is excluded — after the dynamic overwrite
+    // above its content is exactly newKeys, which candidate generation
+    // reads straight from their just-materialized blocks). A keys dir can
+    // be absent only while state holds zero items — same fileless-read
+    // contract as edges()
+    val stateKeys = readState(spark, s"$stateDir/keys")(
       _.filter(col("batch_id") =!= lit(batchId))
         .select("bkey", "ktype", "item_id", "sh"))(newKeys.limit(0))
-      .unionByName(newKeys.select("bkey", "ktype", "item_id", "sh"))
 
     label("candidate pairs")
     val pairs = scratch.checkpoint(
-      Candidates.incrementalPairsFromKeys(newKeys, allKeys, maxHamming = 3, conf.maxSaltedBucket, scratch),
+      Candidates.incrementalPairsFromKeys(newKeys, stateKeys, conf, scratch),
       eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     // the batch scratch rides into verifyPairs too: in cosine mode it
     // localCheckpoints gated pairs + pruned postings internally, and the
     // default noop scratch would pin those blocks forever — one leaked
     // candidate+postings-sized block set per micro-batch.
     label("verify+edges write")
-    val fuzzy = FindStage.verifyPairs(
-      pairs, stateIndex(spark, stateDir, conf), conf.minScore, scratch)
+    val fuzzy = FindStage.verifyPairs(pairs, verifyIndex(items, stateDir, conf), conf.minScore, scratch)
 
     // exact edges: only for clips whose edge is not already committed by an
     // EARLIER batch. Under at-least-once delivery a loser clip can be
@@ -299,21 +297,32 @@ object StreamDedup {
     } finally {
       if (sideThread != null) sideThread.join()
       scratch.release()
+      // a failed batch must not leave its step label on the caller's later jobs
+      spark.sparkContext.setJobDescription(null)
     }
     // the overlapped members upsert must be durably finished (and any
     // failure propagated) before the batch is marked committed
     if (sideErr.get() != null) throw sideErr.get()
     writeCommittedBatch(spark, stateDir, batchId)
-    spark.sparkContext.setJobDescription(null)
   }
 
-  /** The state tables as the batch kernel's IndexTables view, so
-    * verification runs the EXACT batch code path: assembled by
-    * IndexBuild.tables, with postings/norms the same recompute-on-read
-    * projections of items the batch pipeline uses — and verifyPairs
-    * semi-join-prunes postings to candidate endpoints before the scan, so
-    * the cosine-mode projections never materialize corpus-wide here
-    * either (lev mode, the default, reads only items + sigs).
+  /** A micro-batch's verify view: the batch kernel's IndexTables over
+    * `items` (the items state as the batch already read it) and the sigs
+    * state, so verification runs the EXACT batch code path — postings/norms
+    * are the same recompute-on-read projections of items the batch
+    * pipeline uses, and verifyPairs semi-join-prunes postings to candidate
+    * endpoints before the scan, so the cosine-mode projections never
+    * materialize corpus-wide here either (lev mode, the default, reads
+    * only items + sigs). `members` is empty: verifyPairs never reads it,
+    * and the batch's side thread is rewriting the members state meanwhile.
+    */
+  private[streaming] def verifyIndex(items: DataFrame, stateDir: String, conf: FuzzyConf): IndexTables =
+    IndexBuild.tables(conf, items,
+      items.select(col("item_id").as("clip_id"), col("item_id")).limit(0),
+      items.sparkSession.read.parquet(s"$stateDir/sigs"))
+
+  /** The whole state (items, members, sigs) as an IndexTables view, for
+    * reads between micro-batches (the periodic substring compaction).
     */
   def stateIndex(spark: SparkSession, stateDir: String, conf: FuzzyConf): IndexTables =
     IndexBuild.tables(conf,

@@ -93,4 +93,16 @@ class PlanSpec extends AnyFunSuite with Matchers {
     // and the lev path reads no postings (gram column never scanned)
     p should not include "gram_counts"
   }
+
+  test("a micro-batch bringing more than maxBandBucket members into one bucket plans the salted join") {
+    // 300 new members join 20 state members in one bucket: above the
+    // direct-join cap, so the probe side splits into ceil(300/32) salt
+    // chunks instead of landing 300 x 320 rows in a single task
+    def keys(prefix: String, n: Int) =
+      (0 until n).map(i => (7L, 0, f"$prefix$i%04d", 0L)).toDF("bkey", "ktype", "item_id", "sh")
+    val conf = FuzzyConf(maxBandBucket = 100, saltChunk = 32)
+    val pairs = graft.stage.Candidates.incrementalPairsFromKeys(keys("n", 300), keys("s", 20), conf)
+    plan(pairs) should include("sequence") // the B side's replication to every chunk
+    pairs.count() shouldBe 300L * 299 / 2 + 300L * 20
+  }
 }

@@ -387,7 +387,7 @@ class FuzzyPipelineSpec extends AnyFunSuite with Matchers {
     val clips = ClipSynth.table(spark, n, includeAudio = false)
     val idx = graft.stage.IndexBuild(clips, "clip_id", "transcript", conf)
     val pairs = graft.stage.Candidates
-      .fusedPairs(idx.sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
+      .fusedPairs(idx.sigs, conf)
       .localCheckpoint()
     val got = graft.stage.FindStage.verifyPairs(pairs, idx, conf.minScore)
       .select(col("a_id"), col("b_id"), sround(col("score"), 9).as("score"))

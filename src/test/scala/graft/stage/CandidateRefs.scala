@@ -1,5 +1,6 @@
 package graft.stage
 
+import graft.conf.FuzzyConf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,13 +11,17 @@ import org.apache.spark.sql.functions._
   */
 object CandidateRefs {
 
-  /** [[Candidates.taggedSelfPairs]] over one key space: `keyed` has columns
+  /** [[Candidates.taggedSelfPairs]] with every row a probe (the batch form)
+    * over a fused-key table (bkey, ktype, item_id, sh).
+    */
+  def allProbePairs(keys: DataFrame, conf: FuzzyConf): DataFrame =
+    Candidates.taggedSelfPairs(keys.withColumn("probe", lit(true)), conf)
+
+  /** [[allProbePairs]] over one key space: `keyed` has columns
     * (bkey, item_id).
     */
-  def bucketSelfPairs(keyed: DataFrame, cap: Int, saltChunk: Int, maxSalted: Int): DataFrame =
-    Candidates.taggedSelfPairs(
-      keyed.select(col("bkey"), lit(0).as("ktype"), col("item_id"), lit(0L).as("sh")),
-      cap, saltChunk, maxSalted, maxHamming = 0)
+  def bucketSelfPairs(keyed: DataFrame, conf: FuzzyConf): DataFrame =
+    allProbePairs(keyed.select(col("bkey"), lit(0).as("ktype"), col("item_id"), lit(0L).as("sh")), conf)
 
   /** One (bkey, item_id) row per LSH band token of a sigs table. */
   def bandRows(sigs: DataFrame): DataFrame =
@@ -25,19 +30,15 @@ object CandidateRefs {
   /** Unordered candidate pairs (a_id < b_id) from LSH band collisions of a
     * sigs table.
     */
-  def lshPairs(sigs: DataFrame, maxBandBucket: Int, saltChunk: Int, maxSaltedBucket: Int): DataFrame =
-    bucketSelfPairs(bandRows(sigs), maxBandBucket, saltChunk, maxSaltedBucket)
+  def lshPairs(sigs: DataFrame, conf: FuzzyConf): DataFrame =
+    bucketSelfPairs(bandRows(sigs), conf)
 
   /** Unordered candidate pairs from SimHash chunk collisions at hamming
-    * distance <= maxHamming; chunk key c is the c-th 15-bit slice of the
-    * fingerprint offset by c << 15 (the FusedKeysExpr chunk keys).
+    * distance <= FusedKeysExpr.MaxHamming; chunk key c is the c-th 15-bit
+    * slice of the fingerprint offset by c << 15 (the FusedKeysExpr chunk
+    * keys).
     */
-  def simhashPairs(
-      sigs: DataFrame,
-      maxHamming: Int,
-      maxBandBucket: Int,
-      saltChunk: Int,
-      maxSaltedBucket: Int): DataFrame = {
+  def simhashPairs(sigs: DataFrame, conf: FuzzyConf): DataFrame = {
     def chunkKey(c: Int) =
       shiftrightunsigned(col("simhash"), 15 * c).bitwiseAND(lit(0x7fffL)) + lit(c.toLong << 15)
     val chunked = sigs.select(
@@ -45,13 +46,14 @@ object CandidateRefs {
       lit(1).as("ktype"),
       col("item_id"),
       col("simhash").as("sh"))
-    Candidates.taggedSelfPairs(chunked, maxBandBucket, saltChunk, maxSaltedBucket, maxHamming)
+    allProbePairs(chunked, conf)
   }
 
-  /** Candidate pairs touching the `newSigs` side, from signature tables
-    * (both sides pay the fused-key explode).
+  /** Candidate pairs touching the `newSigs` side against the `stateSigs`
+    * of earlier batches, from signature tables (both sides pay the
+    * fused-key explode).
     */
-  def incrementalPairs(newSigs: DataFrame, allSigs: DataFrame, maxHamming: Int, maxBucket: Int): DataFrame =
+  def incrementalPairs(newSigs: DataFrame, stateSigs: DataFrame, conf: FuzzyConf): DataFrame =
     Candidates.incrementalPairsFromKeys(
-      Candidates.fusedKeyed(newSigs), Candidates.fusedKeyed(allSigs), maxHamming, maxBucket)
+      Candidates.fusedKeyed(newSigs), Candidates.fusedKeyed(stateSigs), conf)
 }

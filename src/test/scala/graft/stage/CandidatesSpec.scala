@@ -1,6 +1,7 @@
 package graft.stage
 
 import graft.SparkTestSession
+import graft.conf.FuzzyConf
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -21,10 +22,10 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
     // stays direct; the union must equal the unsalted all-pairs ground truth
     val keyed = bandsDF(Map("hot" -> 300, "small" -> 40, "single" -> 1))
     val salted = CandidateRefs
-      .bucketSelfPairs(keyed, cap = 100, saltChunk = 32, maxSalted = 4096)
+      .bucketSelfPairs(keyed, FuzzyConf(maxBandBucket = 100, saltChunk = 32, maxSaltedBucket = 4096))
       .as[(String, String)].collect().toSet
     val direct = CandidateRefs
-      .bucketSelfPairs(keyed, cap = 1000000, saltChunk = 32, maxSalted = 4096)
+      .bucketSelfPairs(keyed, FuzzyConf(maxBandBucket = 1000000, saltChunk = 32, maxSaltedBucket = 4096))
       .as[(String, String)].collect().toSet
     salted.size shouldBe (300 * 299 / 2 + 40 * 39 / 2)
     salted shouldBe direct
@@ -33,7 +34,7 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
   test("buckets beyond maxSaltedBucket switch to the star regime; others unaffected") {
     val keyed = bandsDF(Map("flood" -> 600, "ok" -> 5))
     val pairs = CandidateRefs
-      .bucketSelfPairs(keyed, cap = 100, saltChunk = 32, maxSalted = 500)
+      .bucketSelfPairs(keyed, FuzzyConf(maxBandBucket = 100, saltChunk = 32, maxSaltedBucket = 500))
       .as[(String, String)].collect()
     val (floodPairs, okPairs) = pairs.partition(_._1.startsWith("flood"))
     okPairs.length shouldBe 5 * 4 / 2
@@ -47,33 +48,27 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
   test("a pair never duplicates across the salted join (a<b once per bucket)") {
     val keyed = bandsDF(Map("hot" -> 150))
     val pairs = CandidateRefs
-      .bucketSelfPairs(keyed, cap = 100, saltChunk = 16, maxSalted = 4096)
+      .bucketSelfPairs(keyed, FuzzyConf(maxBandBucket = 100, saltChunk = 16, maxSaltedBucket = 4096))
       .as[(String, String)].collect()
     pairs.length shouldBe pairs.toSet.size
     pairs.length shouldBe 150 * 149 / 2
   }
 
   test("fusedPairs emits exactly lshPairs UNION simhashPairs") {
-    import graft.conf.FuzzyConf
     val conf = FuzzyConf()
     val clips = graft.audio.ClipSynth.table(spark, 3000, includeAudio = false)
     val idx = graft.stage.IndexBuild(clips, "clip_id", "transcript", conf)
     val sigs = idx.sigs.cache()
-    val fused = Candidates
-      .fusedPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
-      .as[(String, String)].collect().toSet
+    val fused = Candidates.fusedPairs(sigs, conf).as[(String, String)].collect().toSet
     val separate =
-      CandidateRefs.lshPairs(sigs, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
-        .as[(String, String)].collect().toSet ++
-        CandidateRefs.simhashPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
-          .as[(String, String)].collect().toSet
+      CandidateRefs.lshPairs(sigs, conf).as[(String, String)].collect().toSet ++
+        CandidateRefs.simhashPairs(sigs, conf).as[(String, String)].collect().toSet
     fused shouldBe separate
     fused should not be empty // planted dups guarantee collisions
     sigs.unpersist()
   }
 
   test("union of per-batch incrementalPairs == fusedPairs over the full corpus") {
-    import graft.conf.FuzzyConf
     val conf = FuzzyConf()
     // 3000 synthetic clips with planted dups; no bucket approaches the
     // caps, so both paths run their direct regimes and the pair SETS must
@@ -87,20 +82,78 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
     val firstBatch = sigs.filter(fAbs(xxhash64(col("item_id"))) % 3 < 2).cache()
     val secondNew = sigs.filter(fAbs(xxhash64(col("item_id"))) % 3 === 2)
     val incremental =
-      CandidateRefs.incrementalPairs(firstBatch, firstBatch, 3, conf.maxSaltedBucket)
+      CandidateRefs.incrementalPairs(firstBatch, firstBatch.limit(0), conf)
         .as[(String, String)].collect().toSet ++
-        CandidateRefs.incrementalPairs(secondNew, sigs, 3, conf.maxSaltedBucket)
+        CandidateRefs.incrementalPairs(secondNew, firstBatch, conf)
           .as[(String, String)].collect().toSet
-    val batch = Candidates
-      .fusedPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
-      .as[(String, String)].collect().toSet
+    val batch = Candidates.fusedPairs(sigs, conf).as[(String, String)].collect().toSet
     incremental shouldBe batch
     incremental should not be empty
     sigs.unpersist(); firstBatch.unpersist()
+
+    // second input: fused-key rows over three batches with small caps, so
+    // later batches probe buckets that already hold state rows in every
+    // regime — direct, salted (p > maxBandBucket) and star (n >
+    // maxSaltedBucket), band keys and hamming-gated chunk keys alike
+    type Key = (Long, Int, String, Long)
+    val rnd = new scala.util.Random(7)
+    val batchOf = (0 until 600).map(i => if (i == 0) 1 else rnd.nextInt(3))
+    def id(i: Int) = f"i$i%04d"
+    def sh(i: Int) = 0x5a5a5a5aL ^ (1L << (i % 60)) ^ (1L << (i * 7 % 60))
+    // (bkey, ktype, members per batch); i0000 arrives in batch 1 as the new
+    // minimum of buckets 1 and 2, exercising the star's old-hub edge
+    val buckets = Seq((1L, 0, Seq(30, 20, 5)), (2L, 0, Seq(6, 15, 3)), (3L, 1, Seq(10, 12, 4)),
+      (4L, 1, Seq(45, 10, 2)), (5L, 0, Seq(2, 2, 1)))
+    val keyBatches: Seq[Seq[Key]] = (0 until 3).map { b =>
+      val pool = (1 until 600).filter(batchOf(_) == b)
+      buckets.flatMap { case (bkey, ktype, per) =>
+        val ids = rnd.shuffle(pool).take(per(b)) ++ (if (b == 1 && bkey <= 2) Seq(0) else Nil)
+        ids.map(i => (bkey, ktype, id(i), sh(i)))
+      }
+    }
+    // the stream rule, brute force: per batch and touched bucket of n
+    // members (state + batch), every pair with a batch endpoint up to
+    // maxSaltedBucket, else each batch member to the bucket minimum and
+    // the batch member that IS the minimum to the state minimum
+    def streamRule(maxSalted: Int): Set[(String, String)] =
+      keyBatches.indices.flatMap { b =>
+        val state = keyBatches.take(b).flatten
+        keyBatches(b).groupBy(k => (k._1, k._2)).toSeq.flatMap { case (bk, probes) =>
+          val old = state.filter(k => (k._1, k._2) == bk)
+          val all = old ++ probes
+          def ok(x: Key, y: Key) = bk._2 != 1 || java.lang.Long.bitCount(x._4 ^ y._4) <= 3
+          def pair(x: Key, y: Key) = if (x._3 < y._3) (x._3, y._3) else (y._3, x._3)
+          if (all.size <= maxSalted) probes.flatMap(x => all.filter(y => y._3 != x._3 && ok(x, y)).map(pair(x, _)))
+          else {
+            val m = all.minBy(_._3)
+            probes.flatMap { x =>
+              val hub = if (x._3 == m._3) old.minByOption(_._3) else Some(m)
+              hub.filter(ok(x, _)).map(pair(x, _))
+            }
+          }
+        }
+      }.toSet
+    def keysDF(ks: Seq[(Long, Int, String, Long)]) = ks.toDF("bkey", "ktype", "item_id", "sh")
+    def union(c: FuzzyConf) = keyBatches.indices.flatMap { b =>
+      Candidates.incrementalPairsFromKeys(keysDF(keyBatches(b)), keysDF(keyBatches.take(b).flatten), c)
+        .as[(String, String)].collect()
+    }.toSet
+    // salted, no star: still exactly the batch kernel's pair set
+    val salted = FuzzyConf(maxBandBucket = 8, saltChunk = 3)
+    val saltedUnion = union(salted)
+    saltedUnion shouldBe CandidateRefs.allProbePairs(keysDF(keyBatches.flatten), salted)
+      .as[(String, String)].collect().toSet
+    saltedUnion shouldBe streamRule(salted.maxSaltedBucket)
+    // with stars (buckets 1 and 4 flood from batch 1 on): the stream rule
+    val starred = FuzzyConf(maxBandBucket = 8, saltChunk = 3, maxSaltedBucket = 40)
+    val starUnion = union(starred)
+    starUnion shouldBe streamRule(starred.maxSaltedBucket)
+    starUnion should contain(("i0000", keyBatches(0).filter(_._1 == 1L).map(_._3).min)) // old-hub edge
+    starUnion.size should be < saltedUnion.size
   }
 
   test("incremental flood star stays connected when a batch arrival becomes the bucket minimum") {
-    // one flooded bucket (maxBucket = 3): old members o4..o9 whose own
+    // one flooded bucket (maxSaltedBucket = 3): old members o4..o9 whose own
     // arrival-time stars all hang off o4; the next batch brings a0 and a1,
     // BOTH smaller than every old id. a1's star edge goes to the new min
     // a0 — and a0 itself gets NO (member -> min) edge, so without the
@@ -110,8 +163,7 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
       ids.map(id => (7L, 0, id, 0L)).toDF("bkey", "ktype", "item_id", "sh")
     val old = Seq("o4", "o5", "o6", "o7", "o8", "o9")
     val pairs = Candidates
-      .incrementalPairsFromKeys(keys(Seq("a0", "a1")), keys(old ++ Seq("a0", "a1")),
-        maxHamming = 3, maxBucket = 3)
+      .incrementalPairsFromKeys(keys(Seq("a0", "a1")), keys(old), FuzzyConf(maxSaltedBucket = 3))
       .as[(String, String)].collect().toSet
     pairs should contain(("a0", "a1")) // star to the new min
     pairs should contain(("a0", "o4")) // patch to the old hub
@@ -201,7 +253,7 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
     } :+ ("pairA0", base | (1L << 50)) :+ ("pairB0", base | (1L << 50) | (1L << 58)))
       .toDF("item_id", "simhash")
     val got = CandidateRefs
-      .simhashPairs(sigs, maxHamming = 3, maxBandBucket = 50, saltChunk = 16, maxSaltedBucket = 4096)
+      .simhashPairs(sigs, FuzzyConf(maxBandBucket = 50, saltChunk = 16, maxSaltedBucket = 4096))
       .as[(String, String)].collect().toSet
     got should contain(("pairA0", "pairB0"))
   }

@@ -216,6 +216,21 @@ class StreamDedupSpec extends AnyFunSuite with Matchers {
     new java.io.File(stateDir, "keys").isDirectory shouldBe true // it got that far
     new java.io.File(stateDir, "_last_batch").exists shouldBe false // not committed
     awaitStoredAtMost(before) should be <= before
+    // and its step label does not stick to the caller's later jobs
+    spark.sparkContext.getLocalProperty("spark.job.description") shouldBe null
+  }
+
+  test("a micro-batch's verify view reads the items and sigs state, never members") {
+    // the batch's side thread rewrites the members dir while verification
+    // runs: the view must not list or read it
+    val (stateDir, _) = newDirs()
+    StreamDedup.processBatch(batch1.toDF("clip_id", "transcript"), 0L,
+      "clip_id", "transcript", FuzzyConf(), stateDir)
+    val view = StreamDedup.verifyIndex(spark.read.parquet(s"$stateDir/items"), stateDir, FuzzyConf())
+    val files = Seq(view.items, view.members, view.postings, view.norms, view.sigs).flatMap(_.inputFiles)
+    files.filter(_.contains("/members/")) shouldBe empty
+    files.exists(_.contains("/items/")) shouldBe true
+    files.exists(_.contains("/sigs/")) shouldBe true
   }
 
   test("streaming + periodic substring compaction recovers every planted pair at 6k clips") {
