@@ -412,10 +412,11 @@ object Queries {
         |order by key""".stripMargin),
 
     // Exact substring-containment pass (north rule's suffix-array pass),
-    // both length regimes: the raw corpus carries genuine long-regime
-    // containments (planted near-dup docs); deterministic 9/14-char prefix
-    // truncations of the first docs plant short-regime pairs (9 < L=16
-    // contained in 14 <= L/minRatio at ratio 9/14 >= 0.5). Score is an
+    // contained keys on both sides of L=16: the raw corpus carries genuine
+    // containments of long keys (planted near-dup docs); deterministic
+    // 9/14-char prefix truncations of the first docs plant pairs whose
+    // contained key is shorter than L (9 contained in 14 <= (L-1)/minRatio
+    // at ratio 9/14 >= 0.5), which only the shorter windows find. Score is an
     // integer-length ratio divided then rounded — bit-identical on both
     // engines (parity rules above).
     ("q_substr_pairs",
@@ -428,7 +429,7 @@ object Queries {
             substring(lower(col("text")), 1, n).as("key"))
         val items = base.unionByName(pfx(14)).unionByName(pfx(9))
         graft.stage.Candidates
-          .substringPairs(items, prefixLen = 16, minRatio = 0.5, maxBucket = 100000)
+          .substringPairs(items, maxBucket = 100000)
           .select(col("a_id"), col("b_id"), col("kind"), round(col("score"), 6).as("score"))
           .orderBy("a_id", "b_id")
       },
@@ -833,8 +834,7 @@ object Queries {
             b.toLong, "clip_id", "transcript", conf, stateDir)
         }
         val idx = graft.streaming.StreamDedup.stateIndex(s, stateDir, conf)
-        val substr = graft.stage.Candidates.substringPairs(
-          idx.items, conf.substringPrefixLen, conf.substringMinRatio, conf.maxBandBucket)
+        val substr = graft.stage.Candidates.substringPairs(idx.items, conf.maxBandBucket)
         val edges = graft.streaming.StreamDedup.edges(s, stateDir)
           .select("a_id", "b_id")
           .unionByName(substr.select("a_id", "b_id"))

@@ -255,7 +255,7 @@ final case class FuzzyPipeline(
     * groups (score 1.0), fuzzy edges from LSH + SimHash candidates
     * verified by the pair-restricted reference scoring kernel (score >=
     * conf.minScore), and substring-containment edges (score = length
-    * ratio >= conf.substringMinRatio).
+    * ratio >= Candidates.SubstringMinRatio).
     *
     * Semantic boundary vs full reference fidelity: at the default
     * minScore 0.33 the reference's own match graph PERCOLATES on corpora
@@ -303,9 +303,7 @@ final case class FuzzyPipeline(
       val Seq(fuzzy, exact, substr) = concurrently(
         () => materialize(FindStage.verifyPairs(candidatePairs(), idx, conf.minScore, scratch)),
         () => materialize(Candidates.exactEdges(idx.members)),
-        () => materialize(Candidates.substringPairs(
-          idx.items, conf.substringPrefixLen, conf.substringMinRatio, conf.maxBandBucket,
-          scratch)))
+        () => materialize(Candidates.substringPairs(idx.items, conf.maxBandBucket, scratch)))
       // every branch is materialized and candidate generation was
       // forced inside the fuzzy branch (verifyPairs counts
       // its pair side), so the stages' intermediate checkpoints — bucket

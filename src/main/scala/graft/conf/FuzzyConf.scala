@@ -21,10 +21,10 @@ package graft.conf
   * @param gramLo         inclusive lower bound of gram sizes
   * @param gramHi         inclusive upper bound of gram sizes
   * @param useLevenshtein rerank top-50 cosine candidates by normalized
-  *                       Levenshtein similarity (`Internal.hs:87-93`)
+  *                       Levenshtein similarity (`Internal.hs:87-93`; the
+  *                       50 is the reference's fixed take,
+  *                       FindStage.TopKRerank)
   * @param minScore       drop results scoring below this (`Simple.hs:226`)
-  * @param topKRerank     cosine candidates kept per query before the
-  *                       Levenshtein rerank (`Internal.hs:90` - take 50)
   * @param minhashBands   LSH band count
   * @param rowsPerBand    MinHash rows per band. With independent hash
   *                       functions the candidate probability would be the
@@ -72,26 +72,25 @@ package graft.conf
   *                       sqrt(j(1-j)/H) ~ 0.045 at H=126); a run with a
   *                       LOWER minScore must lower this gate in step or
   *                       low-J pairs are silently lost before scoring
-  * @param substringPrefixLen join-key prefix length for the substring-dup
-  *                       pass (suffix-array stand-in, SURVEY §7.4)
-  * @param substringMinRatio minimum len(contained)/len(container) for a
-  *                       substring pair to count as a duplicate edge
+  *
+  * The substring-dup pass (suffix-array stand-in, SURVEY §7.4) is not
+  * configured here: its join prefix length L = 16 and minimum
+  * len(contained)/len(container) 0.5 are the constants
+  * Candidates.SubstringPrefixLen / SubstringMinRatio, and it takes its
+  * hot-window cap from maxBandBucket.
   */
 final case class FuzzyConf(
     gramLo: Int = 2,
     gramHi: Int = 3,
     useLevenshtein: Boolean = true,
     minScore: Double = 0.33,
-    topKRerank: Int = 50,
     minhashBands: Int = 21,
     rowsPerBand: Int = 6,
     maxBandBucket: Int = 100,
     saltChunk: Int = 64,
     maxSaltedBucket: Int = 4096,
     maxPostingsPerGram: Int = 10000,
-    sigGateMinJaccard: Double = 0.3,
-    substringPrefixLen: Int = 16,
-    substringMinRatio: Double = 0.5
+    sigGateMinJaccard: Double = 0.3
 ) {
   require(gramLo >= 2, "gram size must be at least 2 (Internal.hs:193)")
   require(gramHi >= gramLo, "gramHi must be >= gramLo")

@@ -164,9 +164,12 @@ object AudioOracle {
       // join window is shared by more containers than the cap would make
       // oracle and engine diverge SILENTLY (a spurious q_stream_dedup
       // failure — or a pass that masks capped-away pairs). Fail loudly at
-      // oracle-generation time instead. L mirrors substringPrefixLen; 90
-      // (< 100) leaves headroom for the engine's approx_count_distinct
-      // (~2% HLL error) so the fixture never sits ON the cap boundary.
+      // oracle-generation time instead. The window set mirrors the
+      // engine's window rule: every length-L window (L = 16), plus every
+      // strictly shorter window of a container of at most (L-1)/minRatio
+      // chars; a contained key joins on its first L chars. 90 (< 100)
+      // leaves headroom for the engine's approx_count_distinct (~2% HLL
+      // error) so the fixture never sits ON the cap boundary.
       val L = 16
       val capWithHeadroom = 90
       val containerCount = scala.collection.mutable.HashMap.empty[String, Int]
@@ -174,8 +177,8 @@ object AudioOracle {
       keys.foreach { b =>
         val wins = scala.collection.mutable.HashSet.empty[String]
         var i = 0
-        while (i + L <= b.length) { wins += b.substring(i, i + L); i += 1 } // long regime
-        if (b.length <= maxShortContainerLen) { // short-closure regime
+        while (i + L <= b.length) { wins += b.substring(i, i + L); i += 1 } // length-L windows
+        if (b.length <= maxShortContainerLen) { // shorter windows of a short container
           val maxLen = math.min(L - 1, b.length - 1)
           var len = 1
           while (len <= maxLen) {
@@ -221,8 +224,7 @@ object AudioOracle {
     expectedClusters(nDedup)
       .toDF("clip_id", "component")
       .coalesce(1).write.mode("overwrite").parquet(s"$expDir/q_audio_dedup.parquet")
-    expectedStreamClusters(nDedup, minScore = 0.5,
-        minRatio = graft.conf.FuzzyConf().substringMinRatio)
+    expectedStreamClusters(nDedup, minScore = 0.5, minRatio = 0.5)
       .toDF("clip_id", "component")
       .coalesce(1).write.mode("overwrite").parquet(s"$expDir/q_stream_dedup.parquet")
   }

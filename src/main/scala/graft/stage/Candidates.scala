@@ -2,9 +2,15 @@ package graft.stage
 
 import graft.conf.FuzzyConf
 import graft.sql.FusedKeysExpr
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Candidate-pair generation — the scale replacement for the reference's
   * all-items inverted-index walk (Internal.hs:67-74), which at 10^12 rows
@@ -107,14 +113,6 @@ object Candidates {
       .groupBy("bkey", "ktype")
       .agg(count(lit(1)).as("bucket_n"), count_if(col("probe")).as("probe_n"))
       .filter(col("bucket_n") > 1), eager = false, StorageLevel.MEMORY_AND_DISK_SER)
-    // six downstream branches (small a/b, hot A/B, flood x2) consume the
-    // keyed-with-size table. When the non-singleton bucket directory is
-    // small (the common case — most band values are unique), BROADCAST it
-    // and let every branch recompute the cheap map-side key explode: no
-    // multi-million-row block-store materialization (whose long-lived
-    // objects were a measured full-GC driver that scaled with task count),
-    // no shuffle for the size join. Beyond the limit, fall back to the
-    // shuffle join materialized once (the 10^12-scale shape).
     // ONE stats job over the materialized directory blocks: row count
     // (broadcast-vs-shuffle decision), largest bucket, largest probe count
     // and non-probe member count (regime and branch gating)
@@ -124,21 +122,21 @@ object Candidates {
       .head()
     val (dirRows, maxBucketN, maxProbeN) = (dirStats.getLong(0), dirStats.getLong(1), dirStats.getLong(2))
     val allProbes = dirStats.getLong(3) == 0L
-    val withN =
-      if (dirRows <= bucketDirBroadcastLimit) {
-        val joined = keyed.join(sizes.hint("broadcast"), Seq("bkey", "ktype"))
-        // materialize the PRUNED keyed-with-size table once (scratch-tracked,
-        // released with the branch): the directory inner-join drops every
-        // singleton-bucket key, so the blocks hold only collision-bucket
-        // members — a small fraction of the corpus-×-bands explode — and the
-        // a/b sides of the pair self-join read those blocks instead of each
-        // re-running the full sigs-scan + key explode + broadcast join
-        // (guide §1.2 "don't recompute"; interleaved A/B at 1.6M clips:
-        // 13.5-17.1 s -> 9.8-12.1 s for the candidates stage, same pairs)
-        scratch.checkpoint(joined, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
-      } else
-        scratch.checkpoint(keyed.join(sizes, Seq("bkey", "ktype")),
-          eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+    // six downstream branches (small a/b, hot A/B, flood x2) consume the
+    // keyed-with-size table, so it is materialized ONCE (scratch-tracked,
+    // released with the branch): the directory inner-join drops every
+    // singleton-bucket key, so the blocks hold only collision-bucket
+    // members — a small fraction of the corpus-×-bands explode — and the
+    // branches read those blocks instead of each re-running the full
+    // sigs-scan + key explode + size join (guide §1.2 "don't recompute";
+    // interleaved A/B at 1.6M clips: 13.5-17.1 s -> 9.8-12.1 s for the
+    // candidates stage, same pairs). A small non-singleton directory (the
+    // common case — most band values are unique) is BROADCAST into that
+    // join, so it needs no shuffle; beyond the limit the size join
+    // shuffles (the 10^12-scale shape).
+    val dir = if (dirRows <= bucketDirBroadcastLimit) sizes.hint("broadcast") else sizes
+    val withN = scratch.checkpoint(keyed.join(dir, Seq("bkey", "ktype")),
+      eager = false, StorageLevel.MEMORY_AND_DISK_SER)
     def keep(aSh: Column, bSh: Column) =
       (col("ktype") =!= 1) || bit_count(aSh.bitwiseXOR(bSh)) <= FusedKeysExpr.MaxHamming
     def unordered(aId: Column, bId: Column) = Seq(least(aId, bId).as("a_id"), greatest(aId, bId).as("b_id"))
@@ -226,26 +224,42 @@ object Candidates {
     */
   private val bucketDirBroadcastLimit = 4000000L
 
+  /** Join-key prefix length L of the substring pass (SURVEY §7.4). */
+  val SubstringPrefixLen = 16
+
+  /** Minimum len(contained)/len(container) for a substring pair to count
+    * as a duplicate edge.
+    */
+  val SubstringMinRatio = 0.5
+
+  /** Longest container that also hashes its sub-L windows:
+    * floor((L-1)/minRatio) = 30. A contained key shorter than L has at most
+    * L-1 chars, so at minRatio its containers have at most this many.
+    */
+  private val MaxShortContainerLen = ((SubstringPrefixLen - 1) / SubstringMinRatio).toInt
+
   /** Exact substring-containment pairs — the distributed realization of
     * the north rule's suffix-array pass (SURVEY §7.4). A key `a` is a
-    * substring of key `b` iff some suffix of `b` starts with `a`; so match
-    * the length-L prefix of every suffix of b (= every L-gram of b)
-    * against the length-L prefix of a, then verify real containment. Hot
-    * prefixes are capped like LSH buckets.
-    *
-    * Contained keys SHORTER than L can't carry an L-char prefix, but
-    * minRatio bounds their containers to < L/minRatio chars — both sides
-    * of that regime are short strings, so a dedicated closure pass
-    * explodes every sub-L window of the (short) containers — bounded at
-    * ~L²/minRatio window hashes per such row — and joins them against the
-    * short contained keys' whole-key hashes. Together the two regimes make
-    * the pass exact at every contained length.
+    * substring of key `b` iff some suffix of `b` starts with `a`, so ONE
+    * hash join finds every candidate, then real containment is verified:
+    *  - contained side: every non-empty key, hashed on its first L chars
+    *    (the whole key when shorter);
+    *  - container side ([[prefixHashes]]): every length-L window of a key,
+    *    and, for keys of at most [[MaxShortContainerLen]] chars, every
+    *    strictly shorter window of the lengths some contained key has —
+    *    minRatio bounds the containers of a key shorter than L to that
+    *    length. Equal-length containment is key equality, the exact pass's
+    *    territory.
+    * Both sides hash with the same XXH64, so a window matches exactly the
+    * contained keys whose join prefix it equals; a 64-bit collision can
+    * only ADD a candidate, which the contains() check rejects. Hot window
+    * hashes are capped like LSH buckets.
     *
     * Two physical paths, picked by contained-side size:
     *  - BROADCAST (<= substringBroadcastLimit keys): the distinct
     *    contained-prefix hashes ship to every task as one sorted long
-    *    array; each container row probes its |key| window hashes against
-    *    it by binary search and emits ONLY the matches. The generic path's
+    *    array; each container row probes its window hashes against it by
+    *    binary search and emits ONLY the matches. The generic path's
     *    |corpus| x |key| exploded rows (40M rows / multi-GB checkpoint at
     *    bench scale — 65% of the stage's wall time was GC) never exist.
     *  - EXPLODE-JOIN (beyond the limit): every window hash is exploded and
@@ -256,45 +270,50 @@ object Candidates {
     * materialize + count jobs that pay for themselves on a corpus-scale
     * input (one fewer full window-hash pass, no corpus sorts) cost MORE
     * than they save on a query-scale one (measured +1 s on q_substr_pairs'
-    * 3 extra jobs at sf0.1). Inputs with unknown stats (checkpointed RDDs —
-    * the flagship/stream shape) take the materialized arm.
+    * 3 extra jobs at sf0.1). Inputs estimated above the gate, or with
+    * unknown stats (an RDD-backed frame), take the materialized arm.
     *
     * Emits (a_id=contained, b_id=container, kind="substr",
-    * score=len(a)/len(b)) for score >= minRatio.
+    * score=len(a)/len(b)) for score >= [[SubstringMinRatio]].
     *
     * NOTE: the pass local-checkpoints intermediate tables (window hits and
     * candidate pairs on corpus-scale input, exploded windows in the
-    * explode-join and short-key regimes). With the default
-    * [[Scratch.noop]] those blocks stay pinned for the SparkContext
-    * lifetime — fine for a one-shot call, but a long-lived driver calling
-    * this repeatedly must pass its own `scratch` and `release()` it once
-    * the returned pairs are materialized (FuzzyPipeline does).
+    * explode-join arm). With the default [[Scratch.noop]] those blocks
+    * stay pinned for the SparkContext lifetime — fine for a one-shot call,
+    * but a long-lived driver calling this repeatedly must pass its own
+    * `scratch` and `release()` it once the returned pairs are materialized
+    * (FuzzyPipeline does).
     */
-  def substringPairs(
+  def substringPairs(items: DataFrame, maxBucket: Int, scratch: Scratch = Scratch.noop): DataFrame =
+    substringPass(items, maxBucket, scratch, substringBroadcastLimit)
+
+  /** [[substringPairs]] with the broadcast-vs-explode limit as a parameter,
+    * so specs can drive the explode-join arm on a small fixture.
+    */
+  private[stage] def substringPass(
       items: DataFrame,
-      prefixLen: Int,
-      minRatio: Double,
       maxBucket: Int,
-      scratch: Scratch = Scratch.noop): DataFrame = {
+      scratch: Scratch,
+      broadcastLimit: Long): DataFrame = {
     // query-scale inputs keep the lazy plan; corpus-scale (or
     // unknown-stats) inputs take the materialized/hinted arms below
     val lazyPlan = SmallInput(items)
-    val keyed = items.select(col("item_id"), col("key"), length(col("key")).as("klen"))
-    val longK = keyed.filter(col("klen") >= prefixLen)
-    val contained = longK
-      .select(col("item_id").as("a_id"), xxhash64(col("key").substr(lit(1), lit(prefixLen))).as("pfx"))
+    val keys = items
+      .select(col("item_id"), col("key"), length(col("key")).as("klen"))
+      .filter(col("klen") >= 1)
+    val contained = keys.select(col("item_id").as("a_id"),
+      xxhash64(col("key").substr(lit(1), lit(SubstringPrefixLen))).as("pfx"))
 
-    // one stats pass over the keyed projection: long-regime row count (the
-    // broadcast-vs-explode gate) and short-contained row count (whether the
-    // short-key closure regime can produce ANY pair — see below)
-    val statsRow = keyed.agg(
-      sum(when(col("klen") >= prefixLen, 1L).otherwise(0L)).as("n_long"),
-      sum(when(col("klen") >= 1 && col("klen") < prefixLen, 1L).otherwise(0L)).as("n_short"))
+    // ONE stats job: contained-side row count (the broadcast-vs-explode
+    // gate) and the sub-L lengths contained keys have — the only short
+    // window lengths that can match, so the only ones hashed
+    val stats = keys
+      .agg(count(lit(1)), collect_set(when(col("klen") < SubstringPrefixLen, col("klen"))))
       .head()
-    val nContained = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
-    val nShortContained = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
+    val nContained = stats.getLong(0)
+    val shortLens = stats.getSeq[Int](1).sorted.toArray
     val matches: DataFrame =
-      if (nContained <= substringBroadcastLimit) {
+      if (nContained <= broadcastLimit) {
         val spark = items.sparkSession
         import spark.implicits._
         // collect through the primitive Long encoder (round-3 ADVICE): a
@@ -309,8 +328,8 @@ object Candidates {
         val pfxSorted = contained.select("pfx").distinct().as[Long].collect()
         java.util.Arrays.sort(pfxSorted)
         val bc = spark.sparkContext.broadcast(pfxSorted)
-        val matched = matchedPrefixes(prefixLen, bc)
-        val hits = longK.select(col("item_id").as("b_id"), explode(matched(col("key"))).as("pfx"))
+        val hits = keys.select(col("item_id").as("b_id"),
+          explode(prefixHashes(shortLens, Some(bc))(col("key"))).as("pfx"))
         // materialize the window hits once (scratch-released): okPfx and the
         // candidate join both consume `matches`, and without blocks each
         // re-runs the full corpus scan + per-window hash/binary-search UDF
@@ -321,24 +340,22 @@ object Candidates {
         else scratch.checkpoint(hits, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
       } else {
         // ONLY (id, hash) travels through the explode — the key BODY and
-        // even the L-char prefix string are hashed away before the shuffle
-        // (a hash collision can only ADD a candidate pair, and the
-        // contains() verification below rejects it). Materialized once:
-        // the hot-prefix aggregation and the candidate join consume it on
-        // different keys, so exchange reuse cannot share the explode.
-        val containers = scratch.checkpoint(longK
-          .select(col("item_id").as("b_id"),
-            explode(prefixHashes(prefixLen)(col("key"))).as("pfx")),
+        // even the window string are hashed away before the shuffle.
+        // Materialized once: the hot-window aggregation and the candidate
+        // join consume it on different keys, so exchange reuse cannot
+        // share the explode.
+        val containers = scratch.checkpoint(keys
+          .select(col("item_id").as("b_id"), explode(prefixHashes(shortLens, None)(col("key"))).as("pfx")),
           eager = false, StorageLevel.MEMORY_AND_DISK_SER)
         containers.join(contained.select("pfx").distinct(), Seq("pfx"), "left_semi")
       }
 
-    // cap counts distinct CONTAINERS per prefix, not occurrences: a few
-    // long keys with internally repeated L-grams must not push a prefix
+    // cap counts distinct CONTAINERS per window hash, not occurrences: a
+    // few long keys with internally repeated windows must not push a hash
     // past the cap and silently drop genuine containment pairs (round-2
     // ADVICE). approx_count_distinct (HLL, ~2% err) suffices — the cap is
-    // a fanout bound, not an exact semantic. In broadcast mode `matches`
-    // holds only matching windows, so this aggregation is tiny.
+    // a fanout bound, not an exact semantic. `matches` holds only matching
+    // windows, so this aggregation is tiny.
     val okPfx = matches
       .groupBy("pfx")
       .agg(approx_count_distinct(col("b_id")).as("n"))
@@ -351,155 +368,67 @@ object Candidates {
       .select("a_id", "b_id")
       .distinct()
     // same endpoint joins as the verify gate's (FindStage.endpointJoin):
-    // the candidate set is tiny after the prefix match + fanout cap, and
-    // joining it to the corpus-sized longK twice as sort-merge shuffles and
-    // SORTS the whole key table both times. Materialize the candidates
-    // (scratch-released) and pick the join regime from the ACTUAL count.
-    val longPairs = {
-      val la = longK.select(col("item_id").as("a_id"), col("key").as("a_key"), col("klen").as("a_len"))
-      val lb = longK.select(col("item_id").as("b_id"), col("key").as("b_key"), col("klen").as("b_len"))
-      val joined =
-        if (lazyPlan) candidatePairsRaw.join(la, Seq("a_id")).join(lb, Seq("b_id"))
-        else {
-          val cand = scratch.checkpoint(candidatePairsRaw, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
-          FindStage.endpointJoin(cand, cand.count() <= FindStage.broadcastPairLimit, la, lb)
-        }
-      joined
-        .filter(col("a_len") < col("b_len") && col("b_key").contains(col("a_key")))
-        .select(col("a_id"), col("b_id"),
-          (col("a_len").cast("double") / col("b_len")).as("score"))
-        .filter(col("score") >= minRatio)
-        .select(col("a_id"), col("b_id"), lit("substr").as("kind"), col("score"))
-    }
-
-    // SHORT-KEY closure regime: contained klen in [1, L); their containers
-    // are bounded to (klen/minRatio) < L/minRatio chars, so exploding all
-    // strictly-shorter-than-L windows of those short containers is a
-    // constant per-row fanout (<= ~L^2/minRatio hashes on rows of <= 30ish
-    // chars) — no driver state, shuffle-only, disjoint from the long
-    // regime (its pairs all have a_len >= L). Hash collisions only ADD
-    // candidates; contains() verification rejects them.
-    // the short regime's PAIRS all have a contained side shorter than L:
-    // when the corpus holds no such key at all (the common real-transcript
-    // shape — the flagship's shortest transcript is far above L), the whole
-    // regime — including the O(L^2/minRatio)-per-row window explode over
-    // every short container — provably yields the empty set and is skipped
-    if (nShortContained == 0L) return longPairs
-
-    val maxShortContainerLen = ((prefixLen - 1) / minRatio).toInt
-    val shortContained = keyed
-      .filter(col("klen") >= 1 && col("klen") < prefixLen)
-      .select(col("item_id").as("a_id"), xxhash64(col("key")).as("subh"),
-        col("key").as("a_key"), col("klen").as("a_len"))
-    // same two-consumers-on-different-keys shape as the long regime's
-    // `containers`: the okSub aggregation and the candidate join would
-    // otherwise each re-run the O(L^2/minRatio)-per-row window explode
-    val shortWindowed = scratch.checkpoint(keyed
-      .filter(col("klen") >= 2 && col("klen") <= maxShortContainerLen)
-      .select(col("item_id").as("b_id"), col("key").as("b_key"), col("klen").as("b_len"),
-        explode(shortWindowHashes(prefixLen)(col("key"))).as("subh")),
-      eager = false, StorageLevel.MEMORY_AND_DISK_SER)
-    // same hot-bucket fanout cap as the long regime, per substring hash
-    val okSub = shortWindowed
-      .groupBy("subh")
-      .agg(approx_count_distinct(col("b_id")).as("n"))
-      .filter(col("n") <= maxBucket)
-      .select("subh")
-    val shortPairs = shortWindowed
-      .join(okSub, Seq("subh"))
-      .join(shortContained, Seq("subh"))
-      .filter(col("a_id") =!= col("b_id") &&
-        col("a_len") < col("b_len") && col("b_key").contains(col("a_key")))
-      .select(col("a_id"), col("b_id"),
-        (col("a_len").cast("double") / col("b_len")).as("score"))
-      .filter(col("score") >= minRatio)
-      .distinct()
-      .select(col("a_id"), col("b_id"), lit("substr").as("kind"), col("score"))
-
-    longPairs.unionByName(shortPairs)
+    // the candidate set is tiny after the window match + fanout cap, and
+    // joining it to the corpus-sized key table twice as sort-merge
+    // shuffles and SORTS the whole key table both times. Materialize the
+    // candidates (scratch-released) and pick the join regime from the
+    // ACTUAL count.
+    val la = keys.select(col("item_id").as("a_id"), col("key").as("a_key"), col("klen").as("a_len"))
+    val lb = keys.select(col("item_id").as("b_id"), col("key").as("b_key"), col("klen").as("b_len"))
+    val joined =
+      if (lazyPlan) candidatePairsRaw.join(la, Seq("a_id")).join(lb, Seq("b_id"))
+      else {
+        val cand = scratch.checkpoint(candidatePairsRaw, eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+        FindStage.endpointJoin(cand, cand.count() <= FindStage.broadcastPairLimit, la, lb)
+      }
+    val score = col("a_len").cast("double") / col("b_len")
+    joined
+      .filter(col("a_len") < col("b_len") && col("b_key").contains(col("a_key")) && score >= SubstringMinRatio)
+      .select(col("a_id"), col("b_id"), lit("substr").as("kind"), score.as("score"))
   }
 
-  /** Hash of the length-L window at char offset i, value-identical to
-    * `xxhash64(substr(key, i+1, L))` (same XXH64, same seed 42). ASCII
+  /** Hash of the length-`len` window at char offset i, value-identical to
+    * `xxhash64(substr(key, i+1, len))` (same XXH64, same seed 42). ASCII
     * keys hash in place over the UTF8 bytes (zero copies); multi-byte keys
     * take per-window substrings for char-correct offsets.
     */
-  @inline private def windowHash(
-      u: org.apache.spark.unsafe.types.UTF8String,
-      ascii: Boolean,
-      i: Int,
-      prefixLen: Int): Long = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    if (ascii) XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset + i, prefixLen, 42L)
+  @inline private def windowHash(u: UTF8String, ascii: Boolean, i: Int, len: Int): Long =
+    if (ascii) XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset + i, len, 42L)
     else {
-      val s = u.substring(i, i + prefixLen)
+      val s = u.substring(i, i + len)
       XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
     }
-  }
 
-  /** All sliding length-L window hashes of a key in one tight Scala pass:
-    * the column form runs a transform() lambda in the HOF interpreter per
-    * window — at |corpus| x |key| windows it was ~half the substring
-    * pass's cost (round-3 profile: 67 s / 48% GC at 400k items).
+  /** The substring pass's container side in one tight Scala pass: the
+    * hashes of every length-L window of a key and, when the key has at
+    * most [[MaxShortContainerLen]] chars, of every window of each length
+    * in `shortLens` (all < L) that is shorter than the key. With a
+    * broadcast sorted `matchSet` only the hashes found in it (binary
+    * search per window) are emitted, so no corpus x key explode ever
+    * materializes; without one, every window hash is. The column form
+    * ran a transform() lambda in the HOF interpreter per window — at
+    * |corpus| x |key| windows it was ~half the pass's cost (round-3
+    * profile: 67 s / 48% GC at 400k items).
     */
-  private[stage] def prefixHashes(prefixLen: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+  private[stage] def prefixHashes(
+      shortLens: Array[Int],
+      matchSet: Option[Broadcast[Array[Long]]]): UserDefinedFunction =
     udf { (key: String) =>
-      val u = org.apache.spark.unsafe.types.UTF8String.fromString(key)
-      val n = math.max(u.numChars() - prefixLen + 1, 0)
-      val ascii = u.numBytes == u.numChars()
-      val out = new Array[Long](n)
-      var i = 0
-      while (i < n) { out(i) = windowHash(u, ascii, i, prefixLen); i += 1 }
-      out
-    }
-
-  /** DISTINCT hashes of every window of length 1..min(L-1, numChars-1) of
-    * a (short) key — the short-key closure regime's container side. Only
-    * called on keys bounded to < L/minRatio chars, so the per-row fanout
-    * is a small constant; strictly-shorter windows only (equal-length
-    * containment = key equality = the exact pass's territory).
-    */
-  private[stage] def shortWindowHashes(prefixLen: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (key: String) =>
-      val u = org.apache.spark.unsafe.types.UTF8String.fromString(key)
+      val set = if (matchSet.isEmpty) null else matchSet.get.value
+      val u = UTF8String.fromString(key)
       val nc = u.numChars()
-      val ascii = u.numBytes == u.numChars()
-      val seen = new java.util.HashSet[Long]()
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var len = 1
-      val maxLen = math.min(prefixLen - 1, nc - 1)
-      while (len <= maxLen) {
+      val ascii = u.numBytes == nc
+      val out = ArrayBuffer.empty[Long]
+      def windows(len: Int): Unit = {
         var i = 0
-        val n = nc - len + 1
-        while (i < n) {
+        while (i + len <= nc) {
           val h = windowHash(u, ascii, i, len)
-          if (seen.add(h)) out += h
+          if (set == null || java.util.Arrays.binarySearch(set, h) >= 0) out += h
           i += 1
         }
-        len += 1
       }
-      out.toArray
-    }
-
-  /** Window hashes of a key that hit the broadcast sorted contained-prefix
-    * array (binary search per window) — the broadcast substring path emits
-    * only these, so no corpus x key explode ever materializes.
-    */
-  private[stage] def matchedPrefixes(
-      prefixLen: Int,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Long]]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (key: String) =>
-      val set = bc.value
-      val u = org.apache.spark.unsafe.types.UTF8String.fromString(key)
-      val n = math.max(u.numChars() - prefixLen + 1, 0)
-      val ascii = u.numBytes == u.numChars()
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var i = 0
-      while (i < n) {
-        val h = windowHash(u, ascii, i, prefixLen)
-        if (java.util.Arrays.binarySearch(set, h) >= 0) out += h
-        i += 1
-      }
+      if (nc <= MaxShortContainerLen) shortLens.foreach(len => if (len < nc) windows(len))
+      windows(SubstringPrefixLen)
       out.toArray
     }
 

@@ -19,6 +19,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object FindStage {
 
+  /** Cosine candidates kept per query before the Levenshtein rerank: the
+    * reference's fixed take-50 (`Internal.hs:87-92`).
+    */
+  val TopKRerank = 50
+
   /** Probe-mode findMin. probes: (query_id, query). Returns
     * (query_id, score, matched, gram_size); gram_size 0 = exact pass.
     *
@@ -171,7 +176,7 @@ object FindStage {
           val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("key").asc)
           withKeys
             .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= conf.topKRerank)
+            .filter(col("rn") <= TopKRerank)
             .withColumn("score", gf.levNormSim(col("qkey"), col("key")))
         } else withKeys.withColumn("score", col("cosine"))
 

@@ -105,4 +105,27 @@ class PlanSpec extends AnyFunSuite with Matchers {
     plan(pairs) should include("sequence") // the B side's replication to every chunk
     pairs.count() shouldBe 300L * 299 / 2 + 300L * 20
   }
+
+  test("the substring pass hashes windows once: one window-hash Generate, one cap aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
+    import org.apache.spark.sql.execution.LogicalRDD
+    // contained keys below L=16 ("hello world", "cat") and at/above it
+    val items = Seq(("a", "hello world"), ("b", "ah hello world yes"), ("c", "cat"), ("d", "a cat"),
+      ("e", "alabama arkansas"), ("f", "alabama arkansas california")).toDF("item_id", "key")
+    val pairs = graft.stage.Candidates.substringPairs(items, maxBucket = 100)
+    val lp = pairs.queryExecution.optimizedPlan
+    // a table read by two consumers appears twice in the tree: count
+    // distinct subtrees
+    def distinct[T <: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan](nodes: Seq[T]) =
+      nodes.map(_.canonicalized).distinct.size
+    distinct(lp.collect { case g: Generate => g }) shouldBe 1
+    distinct(lp.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[HyperLogLogPlusPlus])) => a
+    }) shouldBe 1
+    // a query-scale input keeps the whole pass lazy: no checkpointed table
+    lp.collect { case r: LogicalRDD => r } shouldBe empty
+    pairs.select("a_id", "b_id").as[(String, String)].collect().toSet shouldBe
+      Set(("a", "b"), ("c", "d"), ("e", "f"))
+  }
 }

@@ -171,26 +171,43 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
   }
 
   test("prefixHashes UDF matches the xxhash64 column on ascii and multibyte keys") {
-    import org.apache.spark.sql.functions.{col, explode, lit, transform, sequence, xxhash64, length => slen}
-    val keys = Seq("alabama arkansas california", "déjà vu naïve café au lait!",
-      "mixed ascii and 中文字符 in one key", "0123456789abcdef").toDF("key")
-    val L = 7
-    val viaUdf = keys
-      .select(col("key"), explode(Candidates.prefixHashes(L)(col("key"))).as("h"))
-      .as[(String, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-    val viaCol = keys
-      .select(col("key"),
-        explode(transform(sequence(lit(1), slen(col("key")) - (L - 1)),
-          i => xxhash64(col("key").substr(i, lit(L))))).as("h"))
-      .as[(String, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-    viaUdf shouldBe viaCol
+    import org.apache.spark.sql.functions.{col, explode, lit, xxhash64}
+    // keys above and at most (L-1)/minRatio = 30 chars (only those also
+    // hash shorter windows), ascii and multibyte (BMP only: String.length
+    // counts chars here as Spark's substr does)
+    val texts = Seq("alabama arkansas california and beyond", "déjà vu naïve café au lait!",
+      "mixed ascii and 中文字符 in one key", "0123456789abcdef", "中文 key", "ab", "a")
+    val keys = texts.toDF("key")
+    val L = Candidates.SubstringPrefixLen
+    val shortLens = Array(1, 2, 5, 15)
+    def grouped(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
+    // the engine's window rule, spelled out: (key, 1-based start, length)
+    val windows = for {
+      k <- texts
+      len <- (if (k.length <= 30) shortLens.filter(_ < k.length).toSeq else Nil) :+ L
+      start <- 1 to k.length - len + 1
+    } yield (k, start, len)
+    val viaCol = grouped(windows.toDF("key", "start", "len")
+      .select(col("key"), xxhash64(col("key").substr(col("start"), col("len"))).as("h")))
+    grouped(keys.select(col("key"), explode(Candidates.prefixHashes(shortLens, None)(col("key"))).as("h"))) shouldBe
+      viaCol
+    grouped(keys.select(col("key"), explode(Candidates.prefixHashes(Array.empty, None)(col("key"))).as("h"))) shouldBe
+      grouped(windows.filter(_._3 == L).toDF("key", "start", "len")
+        .select(col("key"), xxhash64(col("key").substr(col("start"), col("len"))).as("h")))
+    // with a broadcast match set only the windows found in it are emitted
+    val some = viaCol.values.flatten.toArray.distinct.sorted.take(9)
+    val bc = spark.sparkContext.broadcast(some)
+    val matched = grouped(keys.select(col("key"),
+      explode(Candidates.prefixHashes(shortLens, Some(bc))(col("key"))).as("h")))
+    matched shouldBe viaCol.view.mapValues(_.filter(some.contains)).filter(_._2.nonEmpty).toMap
   }
 
   test("substring short-key regime: contained keys below prefixLen are found exactly") {
     import org.apache.spark.sql.functions.col
     val items = Seq(
       ("s1", "hello world"), // 11 chars, contained in s2 (ratio 11/18)
-      ("s2", "ah hello world yes"), // 18-char container (>= prefixLen: both regimes' container side)
+      ("s2", "ah hello world yes"), // 18-char container (>= prefixLen, <= 30: length-L and shorter windows)
       ("s3", "cat"), // contained in s4 at ratio 3/16 < 0.5 -> excluded
       ("s4", "the cat sat here"),
       ("s5", "a"), // 1-char contained in s6 at exactly minRatio
@@ -200,7 +217,7 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
       ("s9", "héllo wörld"), // multibyte contained (11 chars): whole-key
       ("s10", "aa héllo wörld bb") // xxhash64 vs windowHash UDF parity
     ).toDF("item_id", "key")
-    val got = Candidates.substringPairs(items, prefixLen = 16, minRatio = 0.5, maxBucket = 100000)
+    val got = Candidates.substringPairs(items, maxBucket = 100000)
       .select("a_id", "b_id").as[(String, String)].collect().toSet
     got should contain(("s1", "s2"))
     got should contain(("s5", "s6"))
@@ -210,16 +227,15 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
   }
 
   test("substringPairs equals the brute-force containment oracle across both length regimes") {
-    import org.apache.spark.sql.functions.col
     // tiny alphabet + seeded lengths 1..30 straddling prefixLen=16: dense
-    // containment relations in BOTH the long (windowed-prefix) and short
-    // (sub-L window closure) regimes
+    // containment relations for contained keys at or above L (found by
+    // the length-L windows) and below it (found by the shorter windows)
     val rnd = new scala.util.Random(42)
     val alpha = "abcdefgh "
     def randStr(len: Int) = (0 until len).map(_ => alpha(rnd.nextInt(alpha.length))).mkString
     // bases of length 1..24 plus derived containers (base wrapped in 0..len+5
-    // extra chars, straddling the minRatio boundary) — genuine containment in
-    // BOTH regimes; short alphabet also yields coincidental containments
+    // extra chars, straddling the minRatio boundary) — genuine containment on
+    // both sides of L; short alphabet also yields coincidental containments
     val corpus = (0 until 60).flatMap { i =>
       val len = 1 + rnd.nextInt(24)
       val base = randStr(len)
@@ -228,20 +244,39 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
       val container = randStr(front) + base + randStr(extra - front)
       Seq((f"k$i%03d", base), (f"c$i%03d", container))
     }
-    val minRatio = 0.5
+    val minRatio = Candidates.SubstringMinRatio
     val oracle = (for {
       (aId, aKey) <- corpus
       (bId, bKey) <- corpus
       if aKey.length < bKey.length && bKey.contains(aKey) &&
         aKey.length.toDouble / bKey.length >= minRatio
     } yield (aId, bId)).toSet
-    oracle should not be empty // fixture sanity: both regimes exercised
+    oracle should not be empty // fixture sanity: contained keys below and above L
     oracle.exists { case (a, _) => corpus.toMap.apply(a).length < 16 } shouldBe true
     oracle.exists { case (a, _) => corpus.toMap.apply(a).length >= 16 } shouldBe true
-    val got = Candidates
-      .substringPairs(corpus.toDF("item_id", "key"), prefixLen = 16, minRatio = minRatio, maxBucket = 100000)
-      .select("a_id", "b_id").as[(String, String)].collect().toSet
-    got shouldBe oracle
+    // every physical arm: a Seq-backed input is small (lazy plan), an
+    // RDD-backed one has unknown stats (materialized plan), and a zero
+    // broadcast limit forces the explode-join. The tables each arm
+    // checkpoints tell the arms apart: none on the lazy plan, the window
+    // hits + candidate pairs on the materialized one, the exploded windows
+    // on the explode-join.
+    val input = corpus.toDF("item_id", "key")
+    val rddBacked = spark.createDataFrame(input.rdd, input.schema)
+    SmallInput(input) shouldBe true
+    SmallInput(rddBacked) shouldBe false
+    val arms = Seq(
+      ("lazy broadcast", input, 20000000L, 0),
+      ("materialized broadcast", rddBacked, 20000000L, 2),
+      ("explode-join", input, 0L, 1))
+    arms.foreach { case (arm, in, broadcastLimit, checkpoints) =>
+      val scratch = new Scratch()
+      try withClue(s"$arm arm: ") {
+        Candidates.substringPass(in, 100000, scratch, broadcastLimit)
+          .select("a_id", "b_id").as[(String, String)].collect().toSet shouldBe oracle
+        scratch.pending shouldBe checkpoints
+      }
+      finally scratch.release()
+    }
   }
 
   test("simhashPairs with salting still finds hamming<=3 neighbors in a hot chunk bucket") {

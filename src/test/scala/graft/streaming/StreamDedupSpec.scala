@@ -253,8 +253,7 @@ class StreamDedupSpec extends AnyFunSuite with Matchers {
     // periodic batch substring compaction over the accumulated items state
     // (token append/drop planted dups are substring-path by design)
     val idx = StreamDedup.stateIndex(spark, stateDir, conf)
-    val substr = graft.stage.Candidates.substringPairs(
-      idx.items, conf.substringPrefixLen, conf.substringMinRatio, conf.maxBandBucket)
+    val substr = graft.stage.Candidates.substringPairs(idx.items, conf.maxBandBucket)
     val edges = StreamDedup.edges(spark, stateDir).select("a_id", "b_id")
       .unionByName(substr.select("a_id", "b_id"))
     val verts = spark.read.parquet(s"$stateDir/members").select(col("clip_id").as("id"))
@@ -279,8 +278,7 @@ class StreamDedupSpec extends AnyFunSuite with Matchers {
     val got = graft.Queries.queries("q_stream_dedup")(spark, "")
       .as[(String, String)].collect().toMap
     val want = graft.oracle.AudioOracle
-      .expectedStreamClusters(2000, minScore = 0.5,
-        minRatio = FuzzyConf().substringMinRatio)
+      .expectedStreamClusters(2000, minScore = 0.5, minRatio = 0.5)
       .toMap
     got.size shouldBe want.size
     val diffs = want.keysIterator.filter(k => got.get(k) != Some(want(k))).toSeq

@@ -23,8 +23,7 @@ object StreamOracleCheck {
     val got = graft.Queries.queries("q_stream_dedup")(spark, "")
       .as[(String, String)].collect().toMap
     val want = graft.oracle.AudioOracle
-      .expectedStreamClusters(2000, minScore = 0.5,
-        minRatio = graft.conf.FuzzyConf().substringMinRatio)
+      .expectedStreamClusters(2000, minScore = 0.5, minRatio = 0.5)
       .toMap
     val missing = want.keySet -- got.keySet
     val extra = got.keySet -- want.keySet
